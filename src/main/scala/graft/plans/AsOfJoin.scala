@@ -179,32 +179,9 @@ object AsOfJoin {
   def asof(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      rightTiebreak: String): DataFrame = {
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+      rightTiebreak: String): DataFrame =
+    SideJoin("as-of", AsOfJoinStrategy, left, right) { (l, r, la, ra) =>
+      AsOfJoinPlan(l, r, la(leftKey), ra(rightKey), la(leftTs), ra(rightTs),
+        ra(rightTiebreak))
     }
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    // the output concatenates both sides verbatim, so shared names (or the
-    // same un-aliased DataFrame on both sides → shared attribute ids) would
-    // make downstream resolution silently ambiguous — reject eagerly
-    val sharedNames = lPlan.output.map(_.name).toSet
-      .intersect(rPlan.output.map(_.name).toSet)
-    require(sharedNames.isEmpty,
-      s"graft as-of join: both sides expose column(s) ${sharedNames.mkString(", ")} — " +
-        "rename/alias the right side before joining")
-    require(lPlan.outputSet.intersect(rPlan.outputSet).isEmpty,
-      "graft as-of join: left and right share attribute ids (same DataFrame " +
-        "passed twice?) — re-alias one side column-by-column")
-    import org.apache.spark.sql.graftbridge.Bridge
-    def attr(df: DataFrame, name: String): Expression =
-      Bridge.expression(df.col(name))
-    Bridge.ofRows(spark,
-      AsOfJoinPlan(lPlan, rPlan,
-        attr(left, leftKey), attr(right, rightKey),
-        attr(left, leftTs), attr(right, rightTs),
-        attr(right, rightTiebreak)))
-  }
 }

@@ -175,28 +175,9 @@ object IntervalJoin {
   def interval(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      windowLen: Long): DataFrame = {
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
+      windowLen: Long): DataFrame =
+    SideJoin("interval", IntervalJoinStrategy, left, right) { (l, r, la, ra) =>
+      IntervalJoinPlan(l, r, la(leftKey), ra(rightKey), la(leftTs), ra(rightTs),
+        windowLen)
     }
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    val sharedNames = lPlan.output.map(_.name).toSet
-      .intersect(rPlan.output.map(_.name).toSet)
-    require(sharedNames.isEmpty,
-      s"graft interval join: both sides expose column(s) ${sharedNames.mkString(", ")} — " +
-        "rename/alias the right side before joining")
-    require(lPlan.outputSet.intersect(rPlan.outputSet).isEmpty,
-      "graft interval join: left and right share attribute ids (same DataFrame " +
-        "passed twice?) — re-alias one side column-by-column")
-    import org.apache.spark.sql.graftbridge.Bridge
-    def attr(df: DataFrame, name: String): Expression =
-      Bridge.expression(df.col(name))
-    Bridge.ofRows(spark,
-      IntervalJoinPlan(lPlan, rPlan,
-        attr(left, leftKey), attr(right, rightKey),
-        attr(left, leftTs), attr(right, rightTs), windowLen))
-  }
 }

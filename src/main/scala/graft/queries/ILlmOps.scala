@@ -197,64 +197,52 @@ object ILlmOps {
   private val recallStrideSql =
     "(SELECT GREATEST(1, CAST(ceil(count(*) / 5000.0) AS BIGINT)) FROM e)"
 
-  /** Per-(JVM, dir) materialized fixtures for the recall-calibration
-    * family — the TTxn warm-fixture pattern applied to vectors. The
-    * exact cosine top-3 truth table and the depth-3 ranked IVF
-    * assignment are INPUTS every calibration key re-derived per run
-    * (the truth side alone is most of i_ann_ivf_probe_recall's cost);
-    * both are pure functions of the corpus, so they build once per JVM
-    * and dir and the keys time what they actually measure — the approx
-    * side and the recall join. Parquet round-trip is bit-stable: the
-    * truth table is (long, long) pairs, the assignment's doubles are
-    * input-derived (no arithmetic re-ordering on re-read). Built
-    * untimed by `warmAnnFixtures` (Bench) or by the first key that
-    * needs them (Verify — correctness never depends on warm order). */
-  private val annFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Per-(JVM, dir) materialized fixtures for the recall-calibration
+  // family — the TTxn warm-fixture pattern applied to vectors. The
+  // exact cosine top-3 truth table and the depth-3 ranked IVF
+  // assignment are INPUTS every calibration key re-derived per run
+  // (the truth side alone is most of i_ann_ivf_probe_recall's cost);
+  // both are pure functions of the corpus, so they build once per JVM
+  // and dir and the keys time what they actually measure — the approx
+  // side and the recall join. Parquet round-trip is bit-stable: the
+  // truth table is (long, long) pairs, the assignment's doubles are
+  // input-derived (no arithmetic re-ordering on re-read). Built
+  // untimed by `warmAnnFixtures` (Bench) or by the first key that
+  // needs them (Verify — correctness never depends on warm order).
 
   /** Exact cosine top-3 neighbor pairs (a_id, b_id), query side
     * stride-sampled like every recall key. */
   private def exactTop3(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val p = annFixtures.computeIfAbsent("exact3:" + d, _ => {
+      d: String): DataFrame =
+    s.read.parquet(Fixtures.dir("ann_exact3", d) { root =>
       val e = vecs(s, d)
       val a = e.filter(pmod(col("vec_id"), lit(recallStride(s, d))) === 0)
         .select(col("vec_id").as("a_id"), col("v").as("va"), col("nrm").as("na"))
       val b = e.select(col("vec_id").as("b_id"), col("v").as("vb"), col("nrm").as("nb"))
-      val path = scratch("ann_exact3_" + math.abs(d.hashCode))
       a.join(b, col("a_id") =!= col("b_id"))
         .withColumn("cos", expr(dot) / (col("na") * col("nb")))
         .groupBy("a_id")
         .agg(expr("graft_topk(cos, b_id, 3, false)").as("top"))
         .select(col("a_id"), explode(col("top")).as("t"))
         .select(col("a_id"), col("t.id").as("b_id"))
-        .write.mode("overwrite").parquet(path)
-      path
+        .write.mode("overwrite").parquet(root)
     })
-    s.read.parquet(p)
-  }
 
   /** The depth-3 ranked IVF assignment, materialized (serves nprobe
     * 1..3: `ivfAssignedP(s, d, p)` ≡ this filtered to arank ≤ p — same
     * centroids, same tie-break). */
   private def ranked3(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val p = annFixtures.computeIfAbsent("ranked3:" + d, _ => {
-      val path = scratch("ann_ivf_ranked3_" + math.abs(d.hashCode))
-      ivfAssignedP(s, d, 3).write.mode("overwrite").parquet(path)
-      path
+      d: String): DataFrame =
+    s.read.parquet(Fixtures.dir("ann_ivf_ranked3", d) { root =>
+      ivfAssignedP(s, d, 3).write.mode("overwrite").parquet(root)
     })
-    s.read.parquet(p)
-  }
 
   /** Untimed fixture warm for the bench (mirrors TTxn.warmFixtures):
     * builds the truth table and the ranked assignment so no timed
     * calibration key absorbs fixture construction. */
   private[graft] def warmAnnFixtures(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
-    exactTop3(s, d).count()
-    ranked3(s, d).count()
-  }
+      d: String): Unit =
+    Fixtures.warm("ann")(() => exactTop3(s, d), () => ranked3(s, d))
 
   /** k=8 MinHash signature (s0..s7) over whitespace tokens, computed with
     * TWO md5 calls per token instead of eight: families i∈0..3 are the four

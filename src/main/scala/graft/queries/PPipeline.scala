@@ -23,9 +23,6 @@ import graft.Det.r4
   */
 object PPipeline {
 
-  private val warmed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The bucketed-join fixture: orders and lineitem projections written
     * bucketBy(8) + sortBy on the join key, registered as catalog tables.
     * Built once per JVM and sf dir — at 100 TB the bucketed layout is
@@ -34,22 +31,27 @@ object PPipeline {
     * surface of p_join_bucketed is the exchange-free SortMergeJoin +
     * bucketing-reusing aggregate, not the table rewrite. Warmed untimed
     * by Bench via `warmFixtures`; content is deterministic, so the
-    * oracle hash is blind to which invocation built it. */
+    * oracle hash is blind to which invocation built it. Returns the
+    * (lineitem, orders) table names, which carry the dir's tag so two
+    * dirs never read each other's tables. */
   private def bucketedTables(s: org.apache.spark.sql.SparkSession,
-      d: String): String =
-    warmed.computeIfAbsent("bucketed:" + d, _ => {
-      s.sql("DROP TABLE IF EXISTS graft_b_orders")
-      s.sql("DROP TABLE IF EXISTS graft_b_lineitem")
+      d: String): (String, String) = {
+    val tag = Fixtures.tag(d)
+    val (li, ord) = (s"graft_b_lineitem_$tag", s"graft_b_orders_$tag")
+    Fixtures.dir("bucketed", d) { root =>
+      s.sql(s"DROP TABLE IF EXISTS $ord")
+      s.sql(s"DROP TABLE IF EXISTS $li")
       Tables.orders(s, d).select("o_orderkey", "o_totalprice")
-        .write.mode("overwrite").option("path", scratch("bucket_orders"))
+        .write.mode("overwrite").option("path", s"$root/orders")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable("graft_b_orders")
+        .saveAsTable(ord)
       Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount")
-        .write.mode("overwrite").option("path", scratch("bucket_lineitem"))
+        .write.mode("overwrite").option("path", s"$root/lineitem")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable("graft_b_lineitem")
-      d
-    })
+        .saveAsTable(li)
+    }
+    (li, ord)
+  }
 
   /** The DPP fixture: the fact table laid out (partitioned) by day and
     * the per-day dimension — the PRE-EXISTING layout dynamic partition
@@ -60,26 +62,23 @@ object PPipeline {
     * built it. Returns (factPath, dimPath). */
   private def dppTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) = {
-    val (tmp, dimTmp) = (scratch("join_dpp_fact"), scratch("join_dpp_dim"))
-    warmed.computeIfAbsent("dpp:" + d, _ => {
+    val root = Fixtures.dir("join_dpp", d) { root =>
       val ev = Tables.events(s, d)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       ev.select("event_id", "day", "value")
-        .write.mode("overwrite").partitionBy("day").parquet(tmp)
+        .write.mode("overwrite").partitionBy("day").parquet(s"$root/fact")
       ev.groupBy("day").agg(count(lit(1)).as("n_day"))
-        .write.mode("overwrite").parquet(dimTmp)
-      d
-    })
-    (tmp, dimTmp)
+        .write.mode("overwrite").parquet(s"$root/dim")
+    }
+    (s"$root/fact", s"$root/dim")
   }
 
   /** The prior-rollup fixture for p_incremental_agg: the history rollup
     * (every day but the last) a nightly incremental job finds already
     * materialized from yesterday's run. Content is deterministic. */
   private def incrAggRollup(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val tmp = scratch("incr_agg_rollup")
-    warmed.computeIfAbsent("incragg:" + d, _ => {
+      d: String): String =
+    Fixtures.dir("incr_agg_rollup", d) { root =>
       val ev = Tables.events(s, d)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       val maxDay = ev.agg(max("day").as("max_day"))
@@ -87,25 +86,15 @@ object PPipeline {
         .groupBy("day", "event_type")
         .agg(count(lit(1)).as("n"),
           sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
-        .write.mode("overwrite").parquet(tmp)
-      d
-    })
-    tmp
-  }
+        .write.mode("overwrite").parquet(root)
+    }
 
   /** Build the fixtures this family amortizes per JVM — called from
     * Bench's untimed warm block (mirrors TTxn.warmFixtures). */
   private[graft] def warmFixtures(s: org.apache.spark.sql.SparkSession,
       d: String): Unit =
-    Seq[() => Any](() => bucketedTables(s, d), () => dppTables(s, d),
-        () => incrAggRollup(s, d))
-      .foreach { f =>
-        try { f(); () }
-        catch { case e: Throwable =>
-          System.err.println(s"pipeline fixture warm failed (key will " +
-            s"rebuild timed): ${e.getMessage}")
-        }
-      }
+    Fixtures.warm("pipeline")(() => bucketedTables(s, d),
+      () => dppTables(s, d), () => incrAggRollup(s, d))
 
   val m: ListMap[String, Q] = ListMap(
     "p_etl_pipeline" -> ((s, d) => {
@@ -300,9 +289,9 @@ object PPipeline {
       // The bucketed tables are the warmed per-JVM fixture: bucketing's
       // one-time ingest shuffle is the table property, the exchange-free
       // join is the measured operator.
-      bucketedTables(s, d)
-      s.table("graft_b_lineitem")
-        .join(s.table("graft_b_orders").hint("merge"),
+      val (li, ord) = bucketedTables(s, d)
+      s.table(li)
+        .join(s.table(ord).hint("merge"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n_lines"),

@@ -40,41 +40,34 @@ object TTxn {
   // orchestration (~2.5-5 s apiece in the driver bench): what each key
   // MEASURES is the read/DML path through the log, and a real user's
   // table already exists when they query it. So per JVM and sf dir the
-  // common histories are built ONCE through the full commit machinery,
-  // and keys either read the shared table (read-only keys) or apply
-  // their mutation to a file-level CLONE of it — the clone is a straight
-  // directory copy, so the mutation still runs against a genuine log
-  // with real staged files, just without paying the base commits again.
-  // Content is deterministic either way; the oracle hashes are blind to
-  // which JVM built the fixture.
-
-  private val warmed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // common histories are built ONCE through the full commit machinery
+  // (the `Fixtures` registry), and keys either read the shared table
+  // (read-only keys) or apply their mutation to a file-level CLONE of
+  // it — the clone is a straight directory copy, so the mutation still
+  // runs against a genuine log with real staged files, just without
+  // paying the base commits again. Content is deterministic either way;
+  // the oracle hashes are blind to which JVM built the fixture.
 
   /** Root of the shared append·append·overwrite·append history (lines
     * 1,2 / 3,4 / 5) — the read-only keys' fixture. */
   private def fullHistory(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    warmed.computeIfAbsent("full:" + d, _ => {
-      val root = scratch("txn_hist_" + math.abs(d.hashCode))
+    Fixtures.dir("txn_hist", d) { root =>
       val t = TxnTable.fresh(s, root)
       t.append(slice(s, d, 1))
       t.append(slice(s, d, 2))
       t.overwrite(slice(s, d, 3, 4))
       t.append(slice(s, d, 5))
-      root
-    })
+    }
 
   /** Root of the shared two-append base (line 1 at v0, line 2 at v1) —
     * the mutating keys clone this and diverge. */
   private def base12(s: org.apache.spark.sql.SparkSession, d: String): String =
-    warmed.computeIfAbsent("b12:" + d, _ => {
-      val root = scratch("txn_b12_" + math.abs(d.hashCode))
+    Fixtures.dir("txn_b12", d) { root =>
       val t = TxnTable.fresh(s, root)
       t.append(slice(s, d, 1))
       t.append(slice(s, d, 2))
-      root
-    })
+    }
 
   /** Root of the shared base12 + CDC-merge history (v2 = line 1 verbatim,
     * line 2 doubled, line 6 inserted, with the commit-time CDC sidecar) —
@@ -84,19 +77,12 @@ object TTxn {
     * through time travel). Content is deterministic; oracle hashes are
     * blind to which key built it. */
   private def mergedCdc(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    // dependencies built OUTSIDE the mapping fn: a nested computeIfAbsent
-    // on the same map is a recursive update (CHM throws — observed once
-    // the r19 warm block started building fixtures back to back)
-    val base = base12(s, d)
-    val src = upsertSrc(s, d)
-    warmed.computeIfAbsent("mcdc:" + d, _ => {
-      val t = cloneOf(s, base, "txn_mcdc_" + math.abs(d.hashCode))
-      val updates = s.read.parquet(src)
-      t.merge(updates, Seq("l_orderkey", "l_linenumber"), cdc = true) // v2
-      t.root
-    })
-  }
+      d: String): String =
+    Fixtures.dir("txn_mcdc", d) { root =>
+      val t = cloneInto(s, base12(s, d), root)
+      t.merge(s.read.parquet(upsertSrc(s, d)),
+        Seq("l_orderkey", "l_linenumber"), cdc = true)               // v2
+    }
 
   /** Root of the FULL change-feed history (mergedCdc + the v3 compact +
     * the v4 cdc delete) — what `t_txn_cdc` reads. The key's measured
@@ -105,17 +91,12 @@ object TTxn {
     * whole history is built once per JVM and sf dir and the key opens it
     * read-only (r18 verdict carried item 2). */
   private def cdcFull(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    // dependency built OUTSIDE the mapping fn: a nested computeIfAbsent
-    // on the same map is a recursive update (CHM may throw)
-    val src = mergedCdc(s, d)
-    warmed.computeIfAbsent("cdcfull:" + d, _ => {
-      val t = cloneOf(s, src, "txn_cdcfull_" + math.abs(d.hashCode))
+      d: String): String =
+    Fixtures.dir("txn_cdcfull", d) { root =>
+      val t = cloneInto(s, mergedCdc(s, d), root)
       t.compact(target = 4)                                          // v3
       t.deleteWhere(col("l_quantity") > 25, cdc = true)              // v4
-      t.root
-    })
-  }
+    }
 
   /** Catalog root holding the PRE-MERGE base of the catalog-route
     * conditional merge (graft.main.condm with lines 1+2 inserted) —
@@ -125,16 +106,7 @@ object TTxn {
     * the CREATE+INSERT rebuild (r18 verdict carried item 3). */
   private def catmBase(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    warmed.computeIfAbsent("catm:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val root = scratch("txn_sqlcat_catmbase_" + math.abs(d.hashCode))
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+    Fixtures.dir("txn_sqlcat_catmbase", d) { root =>
       val ss = graft.sources.GraftSql.session(s, root)
       ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
       ss.sql("CREATE TABLE graft.main.condm " +
@@ -142,35 +114,21 @@ object TTxn {
       slice(ss, d, 1).unionByName(slice(ss, d, 2))
         .createOrReplaceTempView("condm_base")
       ss.sql("INSERT INTO graft.main.condm SELECT * FROM condm_base")
-      root
-    })
+    }
 
   /** Build every shared fixture this key family amortizes per JVM —
     * called from Bench's UNTIMED warm block so no timed key pays fixture
     * orchestration (the measured surfaces are the reads/DML, and a real
-    * user's table already exists when they query it). Each build guards
-    * itself: one failure must not disable the rest, and the failing
-    * key will rebuild (and surface the error) when it runs. */
+    * user's table already exists when they query it). */
   private[graft] def warmFixtures(s: org.apache.spark.sql.SparkSession,
       d: String): Unit =
-    Seq[() => Any](
+    Fixtures.warm("txn")(
       () => fullHistory(s, d), () => base12(s, d), () => mergedCdc(s, d),
       () => condSrc(s, d), () => line6Src(s, d), () => upsertSrc(s, d),
       () => sqlHistory(s, d), () => cdcFull(s, d), () => catmBase(s, d),
-      // the remaining per-JVM fixtures used to build inside their first
-      // timed key (r20: t_txn_count_meta carried 2.2 s of CREATE+DML
-      // orchestration that is not the metadata count it measures) —
-      // every warmed.computeIfAbsent fixture now warms here, untimed
       () => sqlPruneHistory(s, d), () => decimalHistory(s, d),
       () => timeFnHistory(s, d), () => strPruneHistory(s, d),
-      () => optWhereHistory(s, d), () => cntMetaHistory(s, d)
-    ).foreach { f =>
-      try { f(); () }
-      catch { case e: Throwable =>
-        System.err.println(s"txn fixture warm failed (key will rebuild " +
-          s"timed): ${e.getMessage}")
-      }
-    }
+      () => optWhereHistory(s, d), () => cntMetaHistory(s, d))
 
   /** Staged parquet of the deduped-and-doubled line-2 merge source (max
     * flag, 2x max qty per key — the testdata's key is not unique and the
@@ -181,39 +139,33 @@ object TTxn {
     * — r17 verdict hygiene #3). */
   private def condSrc(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    warmed.computeIfAbsent("csrc:" + d, _ => {
-      val dir = scratch("txn_condsrc_" + math.abs(d.hashCode))
+    Fixtures.dir("txn_condsrc", d) { root =>
       slice(s, d, 2)
         .groupBy("l_orderkey", "l_linenumber")
         .agg(max("l_returnflag").as("l_returnflag"),
           (max("l_quantity") * 2).as("l_quantity"))
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+        .write.mode("overwrite").parquet(root)
+    }
 
   /** Staged parquet of the line-6 slice — the INSERT side of the merge
     * sources (kept un-deduped: line-6 dups prove per-row inserts). */
   private def line6Src(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    warmed.computeIfAbsent("l6src:" + d, _ => {
-      val dir = scratch("txn_l6src_" + math.abs(d.hashCode))
-      slice(s, d, 6).write.mode("overwrite").parquet(dir)
-      dir
-    })
+    Fixtures.dir("txn_l6src", d) { root =>
+      slice(s, d, 6).write.mode("overwrite").parquet(root)
+    }
 
   /** Staged parquet of the upsert-all merge source (line 2 doubled, NOT
     * deduped — key-replace tolerates dups — plus line 6), shared by the
     * SQL upsert merges (view and path-source front doors). */
   private def upsertSrc(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    warmed.computeIfAbsent("usrc:" + d, _ => {
-      val dir = scratch("txn_usrc_" + math.abs(d.hashCode))
+    Fixtures.dir("txn_usrc", d) { root =>
       slice(s, d, 2).withColumn("l_quantity", col("l_quantity") * 2)
         .unionByName(slice(s, d, 6))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+        .write.mode("overwrite").parquet(root)
+    }
 
   /** Clone the whole table tree (data + log) at `srcP` into `dstP`,
     * wiping any previous occupant. Regular files HARD-LINK (the format
@@ -227,11 +179,7 @@ object TTxn {
       dstP: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    if (Files.exists(dstP)) {
-      val w = Files.walk(dstP)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally w.close()
-    }
+    Fixtures.wipe(dstP.toString)
     val w = Files.walk(srcP)
     try w.iterator().asScala.foreach { p =>
       val dst = dstP.resolve(srcP.relativize(p).toString)
@@ -248,14 +196,19 @@ object TTxn {
     } finally w.close()
   }
 
-  /** Fresh mutable clone of the table at `src` under `name`'s scratch
-    * dir (see `cloneTree` for the link semantics). */
-  private def cloneOf(s: org.apache.spark.sql.SparkSession, src: String,
-      name: String): TxnTable = {
-    val dstP = java.nio.file.Paths.get(scratch(name))
-    cloneTree(java.nio.file.Paths.get(src), dstP)
-    TxnTable.at(s, dstP.toString)
+  /** Fresh mutable clone of the table at `src` at `dst` (see `cloneTree`
+    * for the link semantics). */
+  private def cloneInto(s: org.apache.spark.sql.SparkSession, src: String,
+      dst: String): TxnTable = {
+    cloneTree(java.nio.file.Paths.get(src), java.nio.file.Paths.get(dst))
+    TxnTable.at(s, dst)
   }
+
+  /** Fresh mutable clone of the table at `src` under `name`'s scratch
+    * dir. */
+  private def cloneOf(s: org.apache.spark.sql.SparkSession, src: String,
+      name: String): TxnTable =
+    cloneInto(s, src, scratch(name))
 
   /** Shared SQL-surface fixture: the `graft` catalog mounted on a
     * derived session (GraftSql.session — analyzer extensions + catalog
@@ -265,18 +218,8 @@ object TTxn {
     * read the result back through SQL too, so the whole path under test
     * is the one a SQL user holds. */
   private def sqlHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.SparkSession = {
-    val root = scratch("txn_sqlcat_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("sql:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      // scratch dirs persist across JVM runs; CREATE TABLE requires absence
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      d: String): org.apache.spark.sql.SparkSession =
+    graft.sources.GraftSql.session(s, Fixtures.dir("txn_sqlcat", d) { root =>
       val ss = graft.sources.GraftSql.session(s, root)
       ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
       ss.sql("CREATE TABLE graft.main.demo " +
@@ -294,10 +237,28 @@ object TTxn {
       ss.sql("UPDATE graft.main.demo SET l_quantity = l_quantity + 100 " +
         "WHERE l_returnflag = 'R'")                                 // v4
       ss.sql("DELETE FROM graft.main.demo WHERE l_quantity > 120")  // v5
-      root
     })
-    graft.sources.GraftSql.session(s, root)
-  }
+
+  /** A catalog-mounted table `graft.main.<table>` holding `src`,
+    * cluster-compacted on `by` into 4 range-disjoint files, in fixture
+    * `name`'s root — the skipping fixtures' shared layout. Returns the
+    * session the catalog is mounted on. */
+  private def clusteredHistory(s: org.apache.spark.sql.SparkSession,
+      d: String, name: String, table: String, by: String)(
+      src: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.SparkSession =
+    graft.sources.GraftSql.session(s, Fixtures.dir(name, d) { root =>
+      val ss = graft.sources.GraftSql.session(s, root)
+      ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
+      val df = src(ss)
+      ss.sql(s"CREATE TABLE graft.main.$table " +
+        s"(${df.schema.toDDL}) USING `graft-txn`")
+      df.createOrReplaceTempView(s"${table}_src")
+      ss.sql(s"INSERT INTO graft.main.$table SELECT * FROM ${table}_src")
+      TxnTable.at(ss,
+          graft.plans.GraftTableFunctions.rootOf(s"graft.main.$table", ss))
+        .compact(target = 4, clusterBy = Seq(by))
+    })
 
   /** Shared SQL file-skipping fixture: a catalog-mounted table holding
     * lines 1, 2, 6 cluster-compacted into 4 range-disjoint files on
@@ -305,31 +266,10 @@ object TTxn {
     * plan a strict file subset (t_txn_sql_prune reads it; TxnSpec pins
     * the planned count against the native readRange). */
   private def sqlPruneHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.SparkSession = {
-    val root = scratch("txn_sqlprune_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("sqlprune:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
-      val ss = graft.sources.GraftSql.session(s, root)
-      ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
-      ss.sql("CREATE TABLE graft.main.pruned " +
-        s"(${slice(ss, d, 1).schema.toDDL}) USING `graft-txn`")
-      slice(ss, d, 1).unionByName(slice(ss, d, 2)).unionByName(slice(ss, d, 6))
-        .createOrReplaceTempView("sql_prune_src")
-      ss.sql("INSERT INTO graft.main.pruned SELECT * FROM sql_prune_src")
-      TxnTable.at(ss,
-          graft.plans.GraftTableFunctions.rootOf("graft.main.pruned", ss))
-        .compact(target = 4, clusterBy = Seq("l_orderkey"))
-      root
-    })
-    graft.sources.GraftSql.session(s, root)
-  }
+      d: String): org.apache.spark.sql.SparkSession =
+    clusteredHistory(s, d, "txn_sqlprune", "pruned", "l_orderkey")(ss =>
+      slice(ss, d, 1).unionByName(slice(ss, d, 2))
+        .unionByName(slice(ss, d, 6)))
 
   /** Shared DECIMAL-skipping fixture: lines 1, 2 carrying a money-typed
     * column `l_fine DECIMAL(12,2)` (exactly l_orderkey + 0.25 — integer
@@ -340,33 +280,11 @@ object TTxn {
     * TxnSpec pins planned-file counts and DML discovery on its own
     * decimal fixture). */
   private def decimalHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.SparkSession = {
-    val root = scratch("txn_decprune_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("dec:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
-      val ss = graft.sources.GraftSql.session(s, root)
-      ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
-      val src = slice(ss, d, 1).unionByName(slice(ss, d, 2))
+      d: String): org.apache.spark.sql.SparkSession =
+    clusteredHistory(s, d, "txn_decprune", "money", "l_fine")(ss =>
+      slice(ss, d, 1).unionByName(slice(ss, d, 2))
         .withColumn("l_fine",
-          expr("CAST(l_orderkey + 0.25 AS DECIMAL(12, 2))"))
-      src.createOrReplaceTempView("dec_src")
-      ss.sql("CREATE TABLE graft.main.money " +
-        s"(${src.schema.toDDL}) USING `graft-txn`")
-      ss.sql("INSERT INTO graft.main.money SELECT * FROM dec_src")
-      TxnTable.at(ss,
-          graft.plans.GraftTableFunctions.rootOf("graft.main.money", ss))
-        .compact(target = 4, clusterBy = Seq("l_fine"))
-      root
-    })
-    graft.sources.GraftSql.session(s, root)
-  }
+          expr("CAST(l_orderkey + 0.25 AS DECIMAL(12, 2))")))
 
   /** Shared time-skipping fixture: the events projection catalog-mounted
     * and cluster-compacted by `ts` into 4 range-disjoint files — the
@@ -375,32 +293,9 @@ object TTxn {
     * (t_txn_time_fn_prune reads it; TxnSpec pins planned-file counts on
     * its own per-day fixture). */
   private def timeFnHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.SparkSession = {
-    val root = scratch("txn_timefn_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("timefn:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
-      val ss = graft.sources.GraftSql.session(s, root)
-      ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
-      val src = Tables.events(ss, d)
-        .select("event_id", "ts", "event_type", "value")
-      ss.sql("CREATE TABLE graft.main.timefn " +
-        s"(${src.schema.toDDL}) USING `graft-txn`")
-      src.createOrReplaceTempView("timefn_src")
-      ss.sql("INSERT INTO graft.main.timefn SELECT * FROM timefn_src")
-      TxnTable.at(ss,
-          graft.plans.GraftTableFunctions.rootOf("graft.main.timefn", ss))
-        .compact(target = 4, clusterBy = Seq("ts"))
-      root
-    })
-    graft.sources.GraftSql.session(s, root)
-  }
+      d: String): org.apache.spark.sql.SparkSession =
+    clusteredHistory(s, d, "txn_timefn", "timefn", "ts")(ss =>
+      Tables.events(ss, d).select("event_id", "ts", "event_type", "value"))
 
   /** Shared STRING-skipping fixture: lines 1/2/6 tagged with a
     * zero-padded string key and cluster-compacted by it into 4
@@ -409,34 +304,12 @@ object TTxn {
     * bounds (t_txn_str_prune reads it; TxnSpec pins planned-file counts
     * on its own per-file fixture). */
   private def strPruneHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.SparkSession = {
-    val root = scratch("txn_strprune_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("strprune:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
-      val ss = graft.sources.GraftSql.session(s, root)
-      ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
-      val src = slice(ss, d, 1).unionByName(slice(ss, d, 2))
+      d: String): org.apache.spark.sql.SparkSession =
+    clusteredHistory(s, d, "txn_strprune", "strpruned", "tag")(ss =>
+      slice(ss, d, 1).unionByName(slice(ss, d, 2))
         .unionByName(slice(ss, d, 6))
         .withColumn("tag",
-          concat(lit("t"), lpad(col("l_orderkey").cast("string"), 8, "0")))
-      ss.sql("CREATE TABLE graft.main.strpruned " +
-        s"(${src.schema.toDDL}) USING `graft-txn`")
-      src.createOrReplaceTempView("str_prune_src")
-      ss.sql("INSERT INTO graft.main.strpruned SELECT * FROM str_prune_src")
-      TxnTable.at(ss,
-          graft.plans.GraftTableFunctions.rootOf("graft.main.strpruned", ss))
-        .compact(target = 4, clusterBy = Seq("tag"))
-      root
-    })
-    graft.sources.GraftSql.session(s, root)
-  }
+          concat(lit("t"), lpad(col("l_orderkey").cast("string"), 8, "0"))))
 
   /** Root of the scoped-OPTIMIZE fixture (8+8 small files, then
     * `OPTIMIZE ... WHERE l_linenumber = 1` compacts only the line-1
@@ -445,17 +318,8 @@ object TTxn {
     * (content invariance is the oracle's pin), and the selectivity of
     * the maintenance itself is TxnSpec's. */
   private def optWhereHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val root = scratch("txn_optwhere_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("optwhere:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      d: String): String =
+    Fixtures.dir("txn_optwhere", d) { root =>
       val ss = graft.sources.GraftSql.session(s, root)
       ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
       ss.sql("CREATE TABLE graft.main.optw " +
@@ -465,10 +329,7 @@ object TTxn {
       t.append(slice(ss, d, 1).repartition(8))
       t.append(slice(ss, d, 2).repartition(8))
       ss.sql("OPTIMIZE graft.main.optw WHERE l_linenumber = 1")
-      root
-    })
-    root
-  }
+    }
 
   /** Root of the metadata-count fixture (plain appends, a merge-on-read
     * UPDATE whose DVs + post-images net zero, a DV DELETE netting
@@ -476,17 +337,8 @@ object TTxn {
     * the commit log alone. Built once per JVM and sf dir: the measured
     * surface is the metadata fold, not the CREATE+DML orchestration. */
   private def cntMetaHistory(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val root = scratch("txn_cntmeta_" + math.abs(d.hashCode))
-    warmed.computeIfAbsent("cntmeta:" + d, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      d: String): String =
+    Fixtures.dir("txn_cntmeta", d) { root =>
       val ss = graft.sources.GraftSql.session(s, root)
       ss.sql("CREATE NAMESPACE IF NOT EXISTS graft.main")
       ss.sql("CREATE TABLE graft.main.cnt " +
@@ -500,10 +352,7 @@ object TTxn {
       t.update(Map("l_quantity" -> (col("l_quantity") + lit(1.0d))),
         col("l_linenumber") === 2, dv = true) // MOR: DVs + post-images
       t.deleteWhere(col("l_quantity") > 30.0d, dv = true) // DV delete
-      root
-    })
-    root
-  }
+    }
 
   private def agg(df: org.apache.spark.sql.DataFrame) =
     df.groupBy("l_returnflag")
@@ -1037,14 +886,8 @@ object TTxn {
       val dst = TxnTable.fresh(s, scratch("txn_pipe_dst"))
       // stale checkpoints pin offsets a rebuilt fixture can't serve —
       // wipe alongside the fresh tables
-      val ckpt = java.nio.file.Paths.get(scratch("txn_pipe_ckpt"))
-      if (java.nio.file.Files.exists(ckpt)) {
-        val w = java.nio.file.Files.walk(ckpt)
-        try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-        } finally w.close()
-      }
+      val ckpt = scratch("txn_pipe_ckpt")
+      Fixtures.wipe(ckpt)
       src.append(slice(s, d, 1))                                // v0
       src.append(slice(s, d, 2))                                // v1
       val appId = "txn_pipeline"
@@ -1053,7 +896,7 @@ object TTxn {
         .filter(col("l_quantity") > 10)
         .writeStream.format("graft-txn")
         .option("path", dst.root).option("txnAppId", appId)
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .outputMode("append").start()
       q.processAllAvailable()                                   // batch 0
       src.append(slice(s, d, 5))                                // v2
@@ -1241,15 +1084,8 @@ object TTxn {
       // statements the delegating parser lowers onto create/append/
       // overwrite, read back through the log. The overwrite must erase
       // the first insert exactly (lines 2, 6 survive).
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val root = scratch("txn_sql_insert")
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      Fixtures.wipe(root)
       val ss = graft.sources.GraftSql.session(s, scratch("txn_sqlaux"))
       slice(ss, d, 1).createOrReplaceTempView("sql_ins_1")
       slice(ss, d, 2).createOrReplaceTempView("sql_ins_2")
@@ -1407,15 +1243,8 @@ object TTxn {
       // the follow-up INSERT INTO proves it. The IF NOT EXISTS re-run
       // in between must be a pure no-op: a CTAS that re-appended on
       // re-run would double lines 1-2 and break the hash.
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val root = scratch("txn_sql_ctas")
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      Fixtures.wipe(root)
       val ss = graft.sources.GraftSql.session(s, scratch("txn_sqlaux"))
       slice(ss, d, 1).unionByName(slice(ss, d, 2))
         .createOrReplaceTempView("sql_ctas_src")
@@ -1512,16 +1341,9 @@ object TTxn {
       // equal the source snapshot exactly (the oracle recomputes it from
       // source slices). Link independence, constraint/property carriage
       // and divergence are TxnSpec's pins.
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val src = cloneOf(s, base12(s, d), "txn_clone_src")
       val dstRoot = scratch("txn_clone_dst")
-      val p = Paths.get(dstRoot)
-      if (Files.exists(p)) {
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      Fixtures.wipe(dstRoot)
       val ss = graft.sources.GraftSql.session(s, scratch("txn_sqlaux"))
       ss.sql(s"CREATE TABLE '$dstRoot' CLONE '${src.root}'")
       agg(TxnTable.at(s, dstRoot).read())

@@ -100,19 +100,6 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * skipping still applies inside whatever survives the prune). */
   private type FileStats = Map[String, String]
 
-  /** Phase timing to stderr when SPARK_GRAFT_PROF is set — the DML
-    * entry points are multi-action (discovery, guards, stage, publish)
-    * and bench drift questions keep needing the per-phase split. */
-  private def prof[A](name: String)(f: => A): A =
-    if (!TxnTable.ProfEnabled) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"graft-prof $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Files.list with the stream closed (it holds a directory handle). */
   private def ls(p: Path): List[Path] = {
     val s = Files.list(p)
@@ -2912,8 +2899,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // min/max are blind to duplicates, so the former distinct()+agg job
     // (a full exchange of the source keys) is one partial aggregate over
     // the persisted source (r21, guide §2.4)
-    val (keyRange, keyPreds) = prof("m.keyRanges")(
-      mergeKeyRanges(updates, keyCols))
+    val (keyRange, keyPreds) = mergeKeyRanges(updates, keyCols)
     val candidates: Seq[String] =
       if (keyPreds.isEmpty) liveFiles(v) else filesSurviving(v, keyPreds)
     // `_f` is the table-relative provenance tag (matches the log's file
@@ -2935,8 +2921,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
       .join(updKeys.withColumn("_m", lit(true)), keyCols, "left_outer")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val touched = prof("m.touched")(joinedCand.filter(col("_m").isNotNull)
-      .select("_f").distinct().collect().map(_.getString(0)).toSeq.sorted)
+    val touched = joinedCand.filter(col("_m").isNotNull)
+      .select("_f").distinct().collect().map(_.getString(0)).toSeq.sorted
     val inTouched = (if (touched.isEmpty) joinedCand.limit(0)
       else joinedCand.filter(col("_f").isin(touched: _*))).drop("_f")
     // NO multi-match guard here, deliberately: this entry point is
@@ -3030,8 +3016,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
         .sortWithinPartitions(cb.map(col): _*)
     val sc = unionSchema(schemaAt(v), upsI.schema, freshPhysFor())
     val (files, rows, fstats) =
-      try prof("m.stage")(
-        stage(toPhysical(enforced(staged, constraintsAt(v)), sc)))
+      try stage(toPhysical(enforced(staged, constraintsAt(v)), sc))
       finally idCleanup()
     // lost publish races re-validate and re-claim WITHOUT re-staging when
     // every intervening commit is provably disjoint (file sets + key
@@ -3043,16 +3028,18 @@ final class TxnTable(val spark: SparkSession, val root: String,
     val guard = keyRange.map { case (lo, hi) =>
       (physicalIn(Some(sc), keyCols.head), lo, hi)
     }
-    prof("m.publish")(
-      publishReconciling(v, "merge", rows, files, touched, Some(sc),
-        cdcRel, fstats, guard, "merge",
-        props = if (hwDelta.isEmpty) None
-          else Some(propertiesAt(v) ++ hwDelta)))
+    publishReconciling(v, "merge", rows, files, touched, Some(sc),
+      cdcRel, fstats, guard, "merge",
+      props = if (hwDelta.isEmpty) None
+        else Some(propertiesAt(v) ++ hwDelta))
     } finally { joinedCand.unpersist(); () }
   }
 
-  /** Conditional MERGE — the full WHEN-clause surface (`merge` above is
-    * the tuned upsert-all fast path this generalizes). Per target row
+  /** Conditional MERGE — the full WHEN-clause surface. Not a
+    * generalization of `merge` above: that one is key-replace (every
+    * source row of a key lands, and the key's target rows all go), while
+    * here each target row gets at most one clause decision (see
+    * docs/TXN_FORMAT.md, "MERGE semantics"). Per target row
     * matched on `keyCols`, the FIRST matched clause whose condition
     * holds applies (UPDATE with explicit assignments or SET *, or
     * DELETE); per unmatched source row, the first not-matched clause
@@ -3080,8 +3067,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * key-based — conservative, never wrong), and an INSERT-ONLY clause
     * list rewrites NOTHING: it commits a pure append of the surviving
     * source rows (the Delta insert-only-merge optimization). Multiple
-    * source rows matching one target key refuse loudly (same guard as
-    * `merge`). Engine-owned columns: identity values are kept on
+    * source rows matching one target key refuse loudly (`merge` lands
+    * them all, and refuses duplicate matched keys only on an IDENTITY
+    * table). Engine-owned columns: identity values are kept on
     * matched rows and allocated for inserts; generated columns are
     * recomputed on every updated/inserted row; assigning either
     * explicitly is refused. `cdc = true` writes per-clause change
@@ -3158,8 +3146,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // the source keys) is one partial aggregate over the persisted
     // source — this action also materializes the source persist (r21,
     // guide §2.4: remove shuffles outright)
-    val (keyRange, keyPreds) = prof("mw.keyRanges")(
-      mergeKeyRanges(src, keyCols))
+    val (keyRange, keyPreds) = mergeKeyRanges(src, keyCols)
     // BY SOURCE clauses can fire on a row in ANY file (their subject is
     // the absence of a source match), so their presence widens candidate
     // discovery beyond the source-key range — but their own CONDITIONS
@@ -3172,8 +3159,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // to the full live set — pruning loss only, never rows. This is what
     // makes the retention sweep (`... BY SOURCE AND t.ts < cutoff THEN
     // DELETE`) plan the old files instead of scanning 100 TB.
-    val keyCandidates: Seq[String] = prof("mw.discovery")(
-      if (keyPreds.isEmpty) liveFiles(v) else filesSurviving(v, keyPreds))
+    val keyCandidates: Seq[String] =
+      if (keyPreds.isEmpty) liveFiles(v) else filesSurviving(v, keyPreds)
     val candidates: Seq[String] =
       if (bySource.isEmpty) keyCandidates
       else {
@@ -3263,7 +3250,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // in the same t-struct scope the application uses, so discovery and
     // application can never disagree. This collect materializes the
     // persisted pair frame; everything after rides the cache.
-    val touched: Seq[String] = prof("mw.touched") {
+    val touched: Seq[String] = {
       val touches =
         if (bySource.isEmpty) matchedRow
         else matchedRow || bySource.map {
@@ -3276,8 +3263,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
         .toSeq.sorted
     }
     val decided = pairAll.filter(matchedRow).withColumn("_ci", mIdx)
-    // multi-match guard (same refusal as `merge`): a target KEY matched
-    // by more than one source row refuses. Runs over the persisted pair
+    // multi-match guard (key-replace `merge` has none): a target KEY
+    // matched by more than one source row refuses. Runs over the persisted pair
     // frame (an r20 A/B measured a separate source-side probe job at
     // +0.6-0.8 s per merge against this fused form; the pair frame is
     // source-scaled — one row per matching source row × target
@@ -3287,10 +3274,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // duplicate rows repeat the SAME sid and can never false-positive.
     // Runs before any side effect.
     if (touched.nonEmpty) {
-      val dup = prof("mw.guard")(decided
+      val dup = decided
         .groupBy(gks.map(col): _*)
         .agg(fmin(col("_sid")).as("_slo"), fmax(col("_sid")).as("_shi"))
-        .filter(col("_slo") =!= col("_shi")).limit(1).collect())
+        .filter(col("_slo") =!= col("_shi")).limit(1).collect()
       if (dup.nonEmpty) throw new IllegalStateException(
         "merge: multiple source rows match the same target key (" +
           keyCols.zip(dup.head.toSeq).map { case (k, x) => s"$k=$x" }
@@ -3477,8 +3464,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
         .sortWithinPartitions(cb.map(c => col(s"`$c`")): _*)
     val sc = unionSchema(schemaAt(v), merged.schema, freshPhysFor())
     val (files, rows, fstats) =
-      try prof("mw.stage")(
-        stage(toPhysical(enforced(staged, constraintsAt(v)), sc)))
+      try stage(toPhysical(enforced(staged, constraintsAt(v)), sc))
       finally idCleanup()
     // the key-range disjointness guard is UNSOUND once a BY SOURCE
     // clause is in play: an intervening add OUTSIDE the source-key
@@ -3489,11 +3475,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
       else keyRange.map { case (lo, hi) =>
         (physicalIn(Some(sc), keyCols.head), lo, hi)
       }
-    prof("mw.publish")(
-      publishReconciling(v, "merge", rows, files, rewriteFiles, Some(sc),
-        cdcRel, fstats, guard, "merge",
-        props = if (hwDelta.isEmpty) None
-          else Some(propertiesAt(v) ++ hwDelta)))
+    publishReconciling(v, "merge", rows, files, rewriteFiles, Some(sc),
+      cdcRel, fstats, guard, "merge",
+      props = if (hwDelta.isEmpty) None
+        else Some(propertiesAt(v) ++ hwDelta))
     } finally { pairAll.unpersist(); () }
   }
 
@@ -4007,10 +3992,6 @@ object TxnTable {
     * inlining; below it, the entry is self-contained and the driver fold
     * is cheaper than any job. */
   val DefaultManifestThreshold = 64
-
-  /** DML phase timing to stderr (dev/bench diagnosis only). */
-  private[sources] val ProfEnabled =
-    sys.env.get("SPARK_GRAFT_PROF").exists(_.nonEmpty)
 
   /** Checkpoints with at most this many rows retain their file rows
     * driver-side from the metadata pass (one decode — the right trade

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-3 hardening (VERDICT r1 items 5/6/8): partition pruning on
@@ -239,5 +239,26 @@ class RobustnessSpec extends SparkTestBase {
     }
     assert(failures.isEmpty,
       s"${failures.size} keys fail on empty input:\n${failures.mkString("\n")}")
+  }
+
+  test("per-dir fixtures never serve one tier's data to another") {
+    // the fixture-backed keys run at sf0.001, then sf0.01, then sf0.001
+    // in one session: the third run must read sf0.001's own fixtures
+    // again, not the layouts, catalog tables or rollup sf0.01 left behind
+    val root = new java.io.File(sfDir).getParentFile
+    val other = new java.io.File(root, "sf0.01")
+    assume(other.isDirectory, s"no sf0.01 tier under $root")
+    val keys = Seq("p_join_dpp", "p_incremental_agg", "p_join_bucketed")
+    def run(dir: String): Map[String, Seq[Row]] = keys.map(k =>
+      k -> SparkEntry.queries(k)(spark, dir).collect().toSeq).toMap
+    val first = run(sfDir)
+    val second = run(other.getPath)
+    val third = run(sfDir)
+    for (k <- keys) {
+      val (differ, same) = (second(k) != first(k), third(k) == first(k))
+      assert(differ, s"$k: the two tiers must differ")
+      assert(same, s"$k: sf0.001 after sf0.01 returned ${third(k).size} " +
+        s"rows, expected ${first(k).size}")
+    }
   }
 }

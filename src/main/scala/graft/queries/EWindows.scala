@@ -1,6 +1,7 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -117,25 +118,13 @@ object EWindows {
 
     "e_resample_locf" -> ((s, d) => {
       // time-series resampling: per-user 1-hour grid from the user's first
-      // to last event (sequence + explode — a generator, no driver loop),
-      // hourly averages where data exists, gaps filled by last observation
-      // carried forward. Bounded to user_id < 500 like the other
-      // demonstration keys; the shape is one shuffle on the user key.
-      val ev = Tables.events(s, d).filter(col("user_id") < 500)
-        .select(col("user_id"), col("ts"), col("value"))
-      val bounds = ev.groupBy("user_id")
-        .agg(min("ts").as("t0"), max("ts").as("t1"))
-      val grid = bounds.select(col("user_id"),
-        explode(expr("sequence(date_trunc('hour', t0), t1, interval 1 hour)"))
-          .as("slot"))
-      val hourly = ev
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("slot"))
-        .agg(r4(avg("value")).as("v"))
-      val w = Window.partitionBy("user_id").orderBy("slot")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      grid.join(hourly, Seq("user_id", "slot"), "left")
-        .select(col("user_id"), col("slot"),
-          last(col("v"), ignoreNulls = true).over(w).as("v_filled"))
+      // to last event, hourly averages where data exists, gaps filled by
+      // last observation carried forward — each observed hour's average
+      // spans the hours up to the next observation (hourSpans). Bounded to
+      // user_id < 500 like the other demonstration keys.
+      hourSpans(Tables.events(s, d).filter(col("user_id") < 500),
+        r4(avg("value")))
+        .select(col("user_id"), col("slot"), col("v").as("v_filled"))
         .orderBy("user_id", "slot")
     }),
 
@@ -175,50 +164,8 @@ object EWindows {
         .orderBy("o_custkey", "o_orderkey")
     }),
 
-    "e_interp_linear" -> ((s, d) => {
-      // gap-fill by LINEAR interpolation (the complement of e_resample_locf):
-      // per-user hourly grid, observed hours carry the hour's value sum,
-      // missing hours get the line between the nearest observed neighbors.
-      // All arithmetic is integer (value sums in cents, output in 1/100
-      // cent, half-up via the exact (2a+b) DIV 2b form) — interpolated
-      // fractions like pv + (nv-pv)/2 land exactly on round(,4)
-      // half-boundaries where engine FP paths disagree, so the integer
-      // form is the only bit-stable contract (same discipline as
-      // i_pagerank/i_kmeans). The grid spans first..last observation, so
-      // every missing slot has both neighbors. One shuffle on user_id;
-      // both neighbor scans are frames of the same window sort.
-      val ev = Tables.events(s, d).filter(col("user_id") < 500)
-        .select(col("user_id"), col("ts"), col("value"))
-      val bounds = ev.groupBy("user_id")
-        .agg(min("ts").as("t0"), max("ts").as("t1"))
-      val grid = bounds.select(col("user_id"),
-        explode(expr("sequence(date_trunc('hour', t0), t1, interval 1 hour)"))
-          .as("slot"))
-      val hourly = ev
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("slot"))
-        .agg(floor(sum("value") * 100 + 0.5).cast("long").as("hv"))
-      val wp = Window.partitionBy("user_id").orderBy("slot")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val wn = Window.partitionBy("user_id").orderBy("slot")
-        .rowsBetween(0, Window.unboundedFollowing)
-      grid.join(hourly, Seq("user_id", "slot"), "left")
-        .withColumn("h", expr("unix_timestamp(slot) DIV 3600"))
-        // one select so the two same-frame window expressions share one
-        // Window node each way (chained withColumns split them into a
-        // Window stack: 3 nodes instead of the minimal 2)
-        .select(col("user_id"), col("slot"), col("hv"), col("h"),
-          last("hv", ignoreNulls = true).over(wp).as("pv"),
-          last(when(col("hv").isNotNull, col("h")), ignoreNulls = true)
-            .over(wp).as("ph"),
-          first("hv", ignoreNulls = true).over(wn).as("nv"),
-          first(when(col("hv").isNotNull, col("h")), ignoreNulls = true)
-            .over(wn).as("nh"))
-        .select(col("user_id"), col("slot"), col("hv").isNotNull.as("observed"),
-          when(col("hv").isNotNull, col("hv") * 100).otherwise(expr(
-            "(2 * 100 * (pv * (nh - h) + nv * (h - ph)) + (nh - ph)) " +
-              "DIV (2 * (nh - ph))")).as("v_c100"))
-        .orderBy("user_id", "slot")
-    }),
+    "e_interp_linear" -> ((s, d) =>
+      interpLinear(Tables.events(s, d).filter(col("user_id") < 500))),
 
     "e_sessionize" -> ((s, d) => {
       // batch sessionization (gaps-and-islands): a new session starts when
@@ -292,6 +239,55 @@ object EWindows {
         .orderBy("user_id", "event_id")
     }),
   )
+
+  /** Gap-fill by LINEAR interpolation (the complement of e_resample_locf)
+    * of events `ev` (user_id, ts, value): per-user hourly grid from the
+    * first to the last observed hour, observed hours carry the hour's
+    * value sum, missing hours get the line between the nearest observed
+    * neighbors. All arithmetic is integer (value sums in cents, output in
+    * 1/100 cent, half-up via the exact (2a+b) DIV 2b form) — interpolated
+    * fractions like v + (nv-v)/2 land exactly on round(,4)
+    * half-boundaries where engine FP paths disagree, so the integer form
+    * is the only bit-stable contract (same discipline as
+    * i_pagerank/i_kmeans). Every missing slot lies inside a span, so it
+    * has both neighbors. */
+  def interpLinear(ev: DataFrame): DataFrame =
+    hourSpans(ev, floor(sum("value") * 100 + 0.5).cast("long"))
+      .withColumn("h", col("ph") + col("i"))
+      .select(col("user_id"), col("slot"), (col("i") === 0).as("observed"),
+        when(col("i") === 0, col("v") * 100).otherwise(expr(
+          "(2 * 100 * (v * (nh - h) + nv * (h - ph)) + (nh - ph)) " +
+            "DIV (2 * (nh - ph))")).as("v_c100"))
+      .orderBy("user_id", "slot")
+
+  /** Aggregates events `ev` (user_id, ts, value) per user and hour `slot`
+    * into the hour's observation `v = hourly`, and expands the observations
+    * into each user's hourly grid from the first to the last observed
+    * hour. An observed hour spans the hours up to the next observed one and
+    * emits a row for each, `i` hours on (0 = the observed hour itself),
+    * carrying its value and epoch hour `(v, ph)` and the next
+    * observation's `(nv, nh)` (null after a user's last observed hour).
+    * Hours whose `v` is null are not observations: they fall inside a span
+    * like any other missing hour. One `lead` pass over the observed rows
+    * and a generator, so the work is linear in the grid: a frame that
+    * scans ahead to the next observation (ROWS BETWEEN CURRENT ROW AND
+    * UNBOUNDED FOLLOWING) re-aggregates the rest of the partition per row. */
+  private def hourSpans(ev: DataFrame, hourly: Column): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("slot")
+    // one shuffle on user_id serves both the hourly aggregate and the
+    // window; an hour holds about one event, so a map-side partial
+    // aggregate ahead of a (user_id, slot) shuffle would save nothing
+    ev.repartition(col("user_id"))
+      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("slot"))
+      .agg(hourly.as("v"))
+      .filter(col("v").isNotNull)
+      .withColumn("ph", expr("unix_timestamp(slot) DIV 3600"))
+      .select(col("user_id"), col("slot"), col("v"), col("ph"),
+        lead("v", 1).over(w).as("nv"), lead("ph", 1).over(w).as("nh"))
+      .withColumn("i", explode(sequence(lit(0L),
+        coalesce(col("nh") - col("ph") - 1, lit(0L)))))
+      .withColumn("slot", expr("slot + i * INTERVAL 1 HOUR"))
+  }
 
   val oracle: ListMap[String, String] = ListMap(
     "e_win_ranking" ->

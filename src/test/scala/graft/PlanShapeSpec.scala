@@ -271,14 +271,33 @@ class PlanShapeSpec extends SparkTestBase {
         }.size
       assert(n == 1, s"$key: expected exactly 1 Window node, got $n")
     }
-    // interp's preceding- and following-frame scans share one
-    // partition/order, so Spark evaluates all four in ONE Window node
-    // (frames are per-function) — a withColumn stack gives 3
+    // interp's two leads (the next observed value and its hour) share one
+    // partition/order, so Spark evaluates both in ONE Window node
     val n = SparkEntry.queries("e_interp_linear")(spark, sfDir)
       .queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }.size
     assert(n == 1, s"e_interp_linear: expected exactly 1 Window node, got $n")
+  }
+
+  test("no window key re-aggregates a [bounded, UNBOUNDED FOLLOWING] frame") {
+    // Spark runs an aggregate over ROWS/RANGE BETWEEN <bounded> AND
+    // UNBOUNDED FOLLOWING as an UnboundedFollowingWindowFunctionFrame,
+    // which re-aggregates the rest of the partition for every row:
+    // quadratic per partition. A frame unbounded on both sides is one pass
+    // (e_win_first_last, e_win_nth_value) and stays allowed.
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    val offenders = graft.queries.EWindows.m.keys.filter { k =>
+      SparkEntry.queries(k)(spark, sfDir).queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect {
+          case WindowExpression(_: AggregateExpression, WindowSpecDefinition(
+              _, _, SpecifiedWindowFrame(_, lower, UnboundedFollowing)))
+              if lower != UnboundedPreceding => ()
+        })).nonEmpty
+    }
+    assert(offenders.isEmpty, "quadratic following frame in: " +
+      offenders.toSeq.sorted.mkString(", "))
   }
 
   test("graft_minhash is evaluated once per row, not once per slot") {

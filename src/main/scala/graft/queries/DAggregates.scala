@@ -16,6 +16,27 @@ import graft.Det.r4
   */
 object DAggregates {
 
+  /** A group's non-null values as doubles, ascending: the one sorted
+    * array that `exactPercentile` reads any number of quantiles from.
+    * `sort_array` sorts with the type's native ordering, the order of
+    * `array_sort`'s default comparator without evaluating a lambda. */
+  def sortedValues(x: Column): Column = sort_array(collect_list(x.cast("double")))
+
+  /** Spark's exact `percentile(x, p)` (`Percentile.getPercentile`) over
+    * `sortedValues(x)`: position `(n-1)·p`, its floor and ceil neighbours,
+    * and linear interpolation unless the two coincide (position or value),
+    * with the same operations in the same order, so results are
+    * bit-equal. An empty group yields null: `get` is null out of range.
+    * `percentile` instead builds, shuffles and sorts one value→count map
+    * per call. */
+  def exactPercentile(sorted: Column, p: Double): Column = {
+    val pos = (size(sorted) - 1) * lit(p)
+    val (lo, hi) = (floor(pos), ceil(pos))
+    val (vlo, vhi) = (get(sorted, lo.cast("int")), get(sorted, hi.cast("int")))
+    when(lo === hi || vlo === vhi, vlo)
+      .otherwise((hi - pos) * vlo + (pos - lo) * vhi)
+  }
+
   val m: ListMap[String, Q] = ListMap(
     // ------------------------------------------------------- D. aggregations
     "d_agg_basic" -> ((s, d) =>
@@ -199,9 +220,13 @@ object DAggregates {
         .orderBy("l_returnflag")),
 
     "d_agg_percentile" -> ((s, d) =>
-      Tables.lineitem(s, d).groupBy("l_returnflag").agg(
-        r4(expr("percentile(l_extendedprice, 0.5)")).as("p50"),
-        r4(expr("percentile(l_extendedprice, 0.9)")).as("p90"))
+      // exact percentiles read off one sorted array per group (see
+      // exactPercentile): one collect + sort serves both quantiles
+      Tables.lineitem(s, d).groupBy("l_returnflag")
+        .agg(sortedValues(col("l_extendedprice")).as("xs"))
+        .select(col("l_returnflag"),
+          r4(exactPercentile(col("xs"), 0.5)).as("p50"),
+          r4(exactPercentile(col("xs"), 0.9)).as("p90"))
         .orderBy("l_returnflag")),
 
     "d_agg_skewkurt" -> ((s, d) =>
@@ -216,15 +241,18 @@ object DAggregates {
 
     "d_winsorize" -> ((s, d) => {
       // winsorization (percentile clipping), the standard numeric-column
-      // cleaner: per-group p05/p95 via one exact-percentile aggregate on
-      // the tiny group table, broadcast back, values clipped in a codegen
-      // projection. Clipped sums are carried in exact integer cents —
-      // double sums of ~15k cent-valued terms sit within rounding noise
-      // of the 4-decimal boundary, the one place SURVEY §7.3 bans.
+      // cleaner: per-group p05/p95 read off one sorted array per group
+      // (exactPercentile) into the tiny group table, broadcast back,
+      // values clipped in a codegen projection. Clipped sums are carried
+      // in exact integer cents — double sums of ~15k cent-valued terms sit
+      // within rounding noise of the 4-decimal boundary, the one place
+      // SURVEY §7.3 bans.
       val li = Tables.lineitem(s, d)
-      val bounds = li.groupBy("l_returnflag").agg(
-        expr("percentile(l_extendedprice, 0.05)").as("lo"),
-        expr("percentile(l_extendedprice, 0.95)").as("hi"))
+      val bounds = li.groupBy("l_returnflag")
+        .agg(sortedValues(col("l_extendedprice")).as("xs"))
+        .select(col("l_returnflag"),
+          exactPercentile(col("xs"), 0.05).as("lo"),
+          exactPercentile(col("xs"), 0.95).as("hi"))
       li.join(broadcast(bounds), "l_returnflag")
         .withColumn("clip", least(greatest(col("l_extendedprice"), col("lo")), col("hi")))
         .groupBy("l_returnflag")

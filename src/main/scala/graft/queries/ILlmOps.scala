@@ -1,7 +1,7 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -343,6 +343,24 @@ object ILlmOps {
     candidateJoin(docs)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
 
+  /** Exact Jaccard of two token sets (arrays without duplicates):
+    * |A∩B| / (|A|+|B|−|A∩B|), the same value as the intersect/union ratio
+    * with one hash-set build per pair instead of two. Not for arrays with
+    * duplicates, where |A|+|B|−|A∩B| overcounts the union. The
+    * one-element `transform` binds |A∩B| once: a filter or join condition
+    * would evaluate a repeated intersection twice (subexpression
+    * elimination covers projections only). */
+  private[graft] def jaccard(a: Column, b: Column): Column =
+    element_at(transform(array(size(array_intersect(a, b))),
+      i => i.cast("double") / (size(a) + size(b) - i)), 1)
+
+  /** `jaccard(a, b) >= t` behind the O(1) size pre-filter
+    * min(|A|,|B|)/max(|A|,|B|) >= t, which it implies exactly: J ≤ min/max,
+    * and rounded division is monotone. Most pairs stop at the sizes. */
+  private[graft] def jaccardAtLeast(a: Column, b: Column, t: Double): Column =
+    least(size(a), size(b)).cast("double") / greatest(size(a), size(b)) >= t &&
+      jaccard(a, b) >= t
+
   /** DuckDB mirror of the k=8 signature, as a CTE body named `sig`;
     * `src` must provide (doc_id, text). */
   private[graft] def sigSql(src: String): String =
@@ -485,8 +503,7 @@ object ILlmOps {
       val b = t.select(col("doc_id").as("b_id"), col("w").as("wb"))
       a.join(b, col("a_id") < col("b_id"))
         .select(col("a_id"), col("b_id"),
-          r4(size(array_intersect(col("wa"), col("wb"))).cast("double") /
-            size(array_union(col("wa"), col("wb")))).as("jac"))
+          r4(jaccard(col("wa"), col("wb"))).as("jac"))
         .orderBy("a_id", "b_id")
     }),
 
@@ -528,8 +545,7 @@ object ILlmOps {
       val docs = Tables.documents(s, d).filter(col("doc_id") < 200)
       val sets = docs.select(col("doc_id"), array_distinct(split(col("text"), " ")).as("w"))
       val truth = sets.as("a").join(sets.as("b"), col("a.doc_id") < col("b.doc_id"))
-        .filter(size(array_intersect(col("a.w"), col("b.w"))).cast("double") /
-          size(array_union(col("a.w"), col("b.w"))) >= 0.8)
+        .filter(jaccardAtLeast(col("a.w"), col("b.w"), 0.8))
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       val cand = lshCandidates(docs)
       val hit = truth.join(cand, Seq("a_id", "b_id"))

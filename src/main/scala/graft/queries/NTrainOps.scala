@@ -67,8 +67,7 @@ object NTrainOps {
     val edges = cand
       .join(sets.select(col("doc_id").as("a_id"), col("w").as("wa")), "a_id")
       .join(sets.select(col("doc_id").as("b_id"), col("w").as("wb")), "b_id")
-      .filter(size(array_intersect(col("wa"), col("wb"))).cast("double") /
-        size(array_union(col("wa"), col("wb"))) >= 0.8)
+      .filter(ILlmOps.jaccardAtLeast(col("wa"), col("wb"), 0.8))
       .select(col("a_id").as("src"), col("b_id").as("dst"))
     graft.algo.ConnectedComponents
       .run(docs.select(col("doc_id").as("id")), edges)
@@ -158,8 +157,7 @@ object NTrainOps {
       a.join(broadcast(b), col("a_id") < col("b_id"))
         .select(col("a_id"), col("b_id"),
           r4(agree / 8).as("est"),
-          r4(size(array_intersect(col("wa"), col("wb"))).cast("double") /
-            size(array_union(col("wa"), col("wb")))).as("exact"))
+          r4(ILlmOps.jaccard(col("wa"), col("wb"))).as("exact"))
         .withColumn("abs_err", r4(abs(col("est") - col("exact"))))
         .orderBy("a_id", "b_id")
     }),
@@ -335,8 +333,7 @@ object NTrainOps {
       val edges = cand
         .join(sets.select(col("doc_id").as("a_id"), col("w").as("wa")), "a_id")
         .join(sets.select(col("doc_id").as("b_id"), col("w").as("wb")), "b_id")
-        .filter(size(array_intersect(col("wa"), col("wb"))).cast("double") /
-          size(array_union(col("wa"), col("wb"))) >= 0.8)
+        .filter(ILlmOps.jaccardAtLeast(col("wa"), col("wb"), 0.8))
         .select(col("a_id").as("src"), col("b_id").as("dst"))
       val labels = graft.algo.ConnectedComponents
         .run(docs.select(col("doc_id").as("id")), edges)
@@ -414,8 +411,7 @@ object NTrainOps {
       val verified = newIdx.union(newNew)
         .join(sets.select(col("doc_id").as("new_id"), col("w").as("wa")), "new_id")
         .join(sets.select(col("doc_id").as("other_id"), col("w").as("wb")), "other_id")
-        .filter(size(array_intersect(col("wa"), col("wb"))).cast("double") /
-          size(array_union(col("wa"), col("wb"))) >= 0.8)
+        .filter(ILlmOps.jaccardAtLeast(col("wa"), col("wb"), 0.8))
         .select("new_id", "other_id")
       docs.filter(isNew).select("doc_id")
         .join(verified.groupBy("new_id").agg(min("other_id").as("dup_of")),

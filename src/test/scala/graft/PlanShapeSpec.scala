@@ -288,7 +288,9 @@ class PlanShapeSpec extends SparkTestBase {
     // (e_win_first_last, e_win_nth_value) and stays allowed.
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-    val offenders = graft.queries.EWindows.m.keys.filter { k =>
+    import graft.queries.{DAggregates, EWindows, RAnalytics}
+    val keys = EWindows.m.keys ++ DAggregates.m.keys ++ RAnalytics.m.keys
+    val offenders = keys.filter { k =>
       SparkEntry.queries(k)(spark, sfDir).queryExecution.optimizedPlan
         .flatMap(_.expressions.flatMap(_.collect {
           case WindowExpression(_: AggregateExpression, WindowSpecDefinition(

@@ -364,9 +364,14 @@ object DAggregates {
         .orderBy("l_returnflag")),
 
     "d_agg_median" -> ((s, d) =>
-      Tables.lineitem(s, d).groupBy("l_returnflag").agg(
-        r4(median(col("l_extendedprice"))).as("med_price"),
-        r4(median(col("l_quantity"))).as("med_qty"))
+      // median = percentile(x, 0.5), read off one sorted array per column
+      // and group (exactPercentile)
+      Tables.lineitem(s, d).groupBy("l_returnflag")
+        .agg(sortedValues(col("l_extendedprice")).as("xp"),
+          sortedValues(col("l_quantity")).as("xq"))
+        .select(col("l_returnflag"),
+          r4(exactPercentile(col("xp"), 0.5)).as("med_price"),
+          r4(exactPercentile(col("xq"), 0.5)).as("med_qty"))
         .orderBy("l_returnflag")),
 
     "d_agg_bool" -> ((s, d) =>

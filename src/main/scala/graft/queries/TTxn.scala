@@ -375,10 +375,12 @@ object TTxn {
     "t_txn_manifest" -> ((s, d) => {
       // same history as t_txn_snapshot, but EVERY commit is forced through
       // the manifest path (threshold 0): add/remove sets live in parquet
-      // manifests, log entries are O(1), and snapshot resolution runs as
-      // the distributed anti-join (liveFilesDF). The oracle hash pins that
-      // the manifested fold is byte-identical to the inline one — the
-      // 100x-files scale mode produces the same table.
+      // manifests and log entries are O(1). These few manifest rows fit
+      // the driver-fold limit, so the snapshot folds on the driver from
+      // the decoded manifests; the distributed fold (liveFilesDF) takes
+      // over only past TxnTable.checkpointDriverFileLimit file rows,
+      // which TxnSpec forces through that seam. The oracle hash pins
+      // that the manifested fold is byte-identical to the inline one.
       val t = TxnTable.fresh(s, scratch("txn_manifest"), manifestThreshold = 0)
       t.append(slice(s, d, 1))
       t.append(slice(s, d, 2))

@@ -55,21 +55,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `path`/`change`) driver-side via parquet-hadoop's example writer — KBs
   * of metadata, no Spark job — and the log entry references the manifest
   * plus its add/remove COUNTS instead of inlining paths. Entries are then
-  * O(1) bytes regardless of commit width, and snapshot resolution becomes
+  * O(1) bytes regardless of commit width. Snapshot resolution is chosen
+  * by how many FILE ROWS the fold would hold — the checkpoint's file
+  * count plus the add/remove counts the manifested tail entries record —
+  * not by whether a manifest exists. Up to
+  * `TxnTable.checkpointDriverFileLimit` rows fold on the driver: the
+  * manifests are decoded there (memoized per handle, they are
+  * immutable) and folded in version order, last action wins — the
+  * order-AWARE fold a log with `restore` needs (a metadata-only restore
+  * RE-adds previously removed paths, so a plain add-minus-remove set
+  * difference would drop them). At that size a driver fold over KBs
+  * beats scheduling a Spark job. Wider snapshots resolve through
   * `liveFilesDF`: every (path, change) row tagged with its commit
-  * version, grouped by path, last action wins — the order-AWARE fold a
-  * log with `restore` needs (a metadata-only restore RE-adds previously
-  * removed paths, so a plain add-minus-remove set difference would drop
-  * them). Decode and fold run in the data
-  * plane; only the LIVE list is collected, and only because the parquet
-  * scan plans splits from driver-side paths — the same irreducible
-  * collect every log-structured table format performs at scan planning.
-  * Small commits stay inline (threshold default 64): for them a driver
-  * fold over KB entries beats scheduling a Spark job. `merge`/
-  * `deleteWhere` collect only the TOUCHED file list (∝ matched files,
-  * never table size). The commit protocol (atomic create-if-absent of
-  * the next version slot) is identical in both modes; TxnSpec pins
-  * inline/manifest snapshot equivalence version by version.
+  * version, grouped by path, the same last-action-wins rule, decoded and
+  * folded in the data plane; only the LIVE list is collected, and only
+  * because the parquet scan plans splits from driver-side paths — the
+  * same irreducible collect every log-structured table format performs
+  * at scan planning. `merge`/`deleteWhere` collect only the TOUCHED file
+  * list (∝ matched files, never table size). The commit protocol
+  * (atomic create-if-absent of the next version slot) is identical in
+  * both modes; TxnSpec pins inline/manifest snapshot equivalence version
+  * by version, with the manifest folded on the driver and distributed.
   */
 final class TxnTable(val spark: SparkSession, val root: String,
     val manifestThreshold: Int = TxnTable.DefaultManifestThreshold,
@@ -213,7 +219,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
   }
 
   /** Driver-side manifest read (KBs), for the per-entry paths `history`
-    * never needs but `changesSince`/`vacuum`/`readRange` do. */
+    * never needs but the driver fold, `changesSince` and `vacuum` do.
+    * Callers go through the `manifest` memo. */
   private def readManifest(rel: String)
       : (Seq[String], Seq[String], FileStats) = {
     val conf = spark.sessionState.newHadoopConf()
@@ -237,12 +244,39 @@ final class TxnTable(val spark: SparkSession, val root: String,
     (add.result(), remove.result(), st.result())
   }
 
+  /** Manifests are immutable and UUID-named, so a handle may memoize
+    * their parsed rows like `entryCache`: the live-set, stats and change
+    * folds then share one decode per manifest instead of re-reading it
+    * per fold. Admission is bounded by ROWS — a manifest is kept only
+    * while the memo's total stays ≤ [[TxnTable.checkpointDriverFileLimit]],
+    * the heap guard the driver fold obeys; past it, reads go to disk. */
+  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[String], Seq[String], FileStats)]()
+  private val manifestCacheRows = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Manifests decoded FROM DISK by this handle — the observable
+    * ManifestFoldSpec uses to prove the memo serves every fold after the
+    * first, and admits nothing past the limit. Test-only. */
+  private[graft] val parsedManifests = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private def manifest(rel: String): (Seq[String], Seq[String], FileStats) = {
+    val cached = manifestCache.get(rel)
+    if (cached != null) return cached
+    parsedManifests.incrementAndGet()
+    val m = readManifest(rel)
+    val n = (m._1.size + m._2.size).toLong
+    if (manifestCacheRows.addAndGet(n) > TxnTable.checkpointDriverFileLimit ||
+        manifestCache.putIfAbsent(rel, m) != null)
+      manifestCacheRows.addAndGet(-n)
+    m
+  }
+
   private def addsOf(e: Entry): Seq[String] =
-    e.manifest.fold(e.inlineAdd)(readManifest(_)._1)
+    e.manifest.fold(e.inlineAdd)(manifest(_)._1)
   private def removesOf(e: Entry): Seq[String] =
-    e.manifest.fold(e.inlineRemove)(readManifest(_)._2)
+    e.manifest.fold(e.inlineRemove)(manifest(_)._2)
   private def statsOf(e: Entry): FileStats =
-    e.manifest.fold(e.stats)(readManifest(_)._3)
+    e.manifest.fold(e.stats)(manifest(_)._3)
 
   // ------------------------------------------------------------- checkpoints
 
@@ -639,14 +673,18 @@ final class TxnTable(val spark: SparkSession, val root: String,
 
   private def entries(upTo: Long): Seq[Entry] = (0L to upTo).map(parse)
 
-  /** True when snapshot state at `(ck, es)` may fold DRIVER-side: no
-    * manifested tail commit, and any checkpoint small enough that its
-    * file rows are retained ([[TxnTable.checkpointDriverFileLimit]]).
-    * Anything wider resolves through the distributed `liveDF` plan, so
-    * the driver never pins O(files) state for a read. */
+  /** True when snapshot state at `(ck, es)` may fold DRIVER-side: the
+    * file rows the fold would hold — the checkpoint's `nFiles` plus the
+    * add/remove counts of every manifested tail entry (the entry records
+    * them, so no manifest is opened to decide) — number at most
+    * [[TxnTable.checkpointDriverFileLimit]]. Inline entries are KBs
+    * bounded by `manifestThreshold` and are not counted. Anything wider
+    * resolves through the distributed `liveDF` plan, so the driver never
+    * pins O(files) state for a read. */
   private def driverFoldable(ck: Option[Checkpoint], es: Seq[Entry]): Boolean =
-    es.forall(_.manifest.isEmpty) &&
-      ck.forall(_.nFiles <= TxnTable.checkpointDriverFileLimit)
+    ck.fold(0L)(_.nFiles) +
+      es.filter(_.manifest.isDefined).map(e => e.nAdd + e.nRemove).sum <=
+      TxnTable.checkpointDriverFileLimit
 
   /** Snapshot resolution as a Spark plan: (path, change, version) rows
     * from every entry 0..version — the checkpoint's file rows and the
@@ -747,25 +785,28 @@ final class TxnTable(val spark: SparkSession, val root: String,
     else folded.select("path")
   }
 
-  /** Live table-relative paths at `version`. Inline-only logs fold
-    * driver-side (KB entries — a Spark job would cost more than it
-    * saves); once any entry carries a manifest, resolution runs through
+  /** Live table-relative paths at `version`. A snapshot whose file rows
+    * fit [[TxnTable.checkpointDriverFileLimit]] (`driverFoldable`) folds
+    * driver-side, manifests included — KBs of metadata, and a Spark job
+    * would cost more than it saves; a wider one resolves through
     * `liveFilesDF` and only the live list lands on the driver — the
     * scan-planning collect, ∝ live files, never ∝ history. */
   private def liveFiles(version: Long): Seq[String] = {
     val (ck, es) = tailEntries(version)
-    if (driverFoldable(ck, es))
+    if (driverFoldable(ck, es)) {
       // ordered driver fold, seeded from the checkpoint's live set —
-      // pre-checkpoint manifests never need re-reading. Path-KEYED like
-      // the distributed fold: a path added twice without an intervening
-      // remove (the at-least-once publish a lying create-if-absent
-      // forces — see the publish-fault specs) must stay live ONCE, or
-      // the scan reads the file twice.
-      es.foldLeft(ck.fold(Vector.empty[String])(_.live)) { (live, e) =>
-        val kept = live.filterNot(e.inlineRemove.contains)
-        kept ++ e.inlineAdd.filterNot(kept.contains)
-      }.distinct
-    else liveFilesDF(version).collect().map(_.getString(0)).toSeq.sorted
+      // pre-checkpoint manifests never need re-reading. Removes then adds
+      // per entry in version order, so the last action wins and a
+      // restore's re-add survives, like the distributed fold. Path-KEYED:
+      // a path added twice without an intervening remove (the
+      // at-least-once publish a lying create-if-absent forces — see the
+      // publish-fault specs) stays live ONCE, or the scan reads the file
+      // twice. A set keeps each step O(commit), not O(live × commit).
+      val live = scala.collection.mutable.LinkedHashSet.from(
+        ck.fold(Vector.empty[String])(_.live))
+      es.foreach { e => live --= removesOf(e); live ++= addsOf(e) }
+      live.toVector
+    } else liveFilesDF(version).collect().map(_.getString(0)).toSeq.sorted
   }
 
   /** Publish entry `v` atomically; false = another writer won the slot. */
@@ -2378,9 +2419,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
   /** Live files at `v` whose commit stats PROVE every row satisfies
     * `preds` (statsProveAll — the conservative dual of the skip
     * admission). Empty predicate list = a provably-TRUE condition =
-    * every live file. Inline-scale logs fold driver-side; manifest
-    * tables evaluate the prover executor-side inside the planning scan,
-    * exactly like `filesSurviving`. */
+    * every live file. Snapshots within the driver-fold limit fold
+    * driver-side; wider ones evaluate the prover executor-side inside the
+    * planning scan, exactly like `filesSurviving`. */
   private def provablyAllMatch(v: Long,
       preds: Seq[TxnTable.AllPred]): Seq[String] = {
     if (preds.isEmpty) return liveFiles(v)
@@ -2636,19 +2677,20 @@ final class TxnTable(val spark: SparkSession, val root: String,
     val (ck, es) = tailEntries(v)
     val afterStats =
       if (driverFoldable(ck, es)) {
-        // inline-scale log: KB driver fold — a Spark job costs more
-        lastPlanningCollect = -1 // no Spark collect on the inline path
+        // within the driver-fold limit: KB fold — a Spark job costs more
+        lastPlanningCollect = -1 // no Spark collect on the driver path
         val statsByFile: FileStats = statsAt(v)
         liveFiles(v).filter(f =>
           statsByFile.get(f).forall(statsAdmits(_, preds, physOf)))
       } else {
-        // MANIFEST-scale table: the stats prune runs INSIDE the planning
-        // scan — manifests read distributed-side, the admission function
-        // evaluated per path executor-side — so the driver collect lands
-        // ONLY the surviving files, never the live set. At millions of
-        // files this is the planner cost that matters: a point read on a
-        // clustered column collects ~1 path. Stats-less rows (null) are
-        // always kept — incomplete metadata costs pruning, never rows.
+        // past the driver-fold limit: the stats prune runs INSIDE the
+        // planning scan — manifests read distributed-side, the admission
+        // function evaluated per path executor-side — so the driver
+        // collect lands ONLY the surviving files, never the live set. At
+        // millions of files this is the planner cost that matters: a
+        // point read on a clustered column collects ~1 path. Stats-less
+        // rows (null) are always kept — incomplete metadata costs
+        // pruning, never rows.
         import org.apache.spark.sql.functions.{col, udf}
         val (ps, ph) = (preds, physOf)
         val admits = udf((enc: String) =>
@@ -2670,8 +2712,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
   }
 
   /** TEST SEAM: how many paths the most recent predicate-planning pass
-    * landed on the driver — TxnSpec pins that manifest-scale planning
-    * collects only SURVIVORS (not the live set) under a point read. */
+    * landed on the driver (-1 = folded driver-side, no collect) — TxnSpec
+    * pins that distributed planning collects only SURVIVORS (not the
+    * live set) under a point read. */
   @volatile private[graft] var lastPlanningCollect: Int = -1
 
   /** Snapshot read over ONLY the files surviving `preds` — NO row filter
@@ -3993,12 +4036,16 @@ object TxnTable {
     * is cheaper than any job. */
   val DefaultManifestThreshold = 64
 
-  /** Checkpoints with at most this many rows retain their file rows
-    * driver-side from the metadata pass (one decode — the right trade
-    * while the list is KBs); wider ones stay LIGHT and resolution goes
-    * through the distributed `liveDF` plan, so merely opening a huge
-    * table never pins O(files) driver heap. `var` as a TEST SEAM only:
-    * ScaleSpec lowers it to force the light path at fixture scale. */
+  /** The driver-heap guard for snapshot state, in file rows. Checkpoints
+    * with at most this many rows retain their file rows driver-side from
+    * the metadata pass (one decode — the right trade while the list is
+    * KBs); wider ones stay LIGHT. A snapshot folds on the driver while
+    * its checkpoint's files plus its manifested tail entries' add/remove
+    * rows stay within it, and each handle's manifest memo holds at most
+    * this many rows; past it, resolution goes through the distributed
+    * `liveDF` plan, so merely opening a huge table never pins O(files)
+    * driver heap. `var` as a TEST SEAM only: ScaleSpec and TxnSpec lower
+    * it to force the distributed path at fixture scale. */
   private[graft] var checkpointDriverFileLimit: Long = 1L << 16
 
   /** Protocol versions this build can read / write. A table whose log

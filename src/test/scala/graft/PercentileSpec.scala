@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.queries.DAggregates.{exactPercentile, sortedValues}
 
 /** `DAggregates.exactPercentile` over `sortedValues` must reproduce
-  * Spark's exact `percentile` bit for bit: Spark stays the reference. */
+  * Spark's exact `percentile` (and `median`, its 0.5 case) bit for bit:
+  * Spark stays the reference. */
 class PercentileSpec extends SparkTestBase {
   private val sf01Dir =
     new File(new File(sfDir).getParentFile, "sf0.01").getPath
@@ -59,6 +60,14 @@ class PercentileSpec extends SparkTestBase {
     assertSame(li, "l_returnflag", "l_extendedprice", qs)
     assertSame(li, "sk", "l_extendedprice", qs)
     assertSame(li, "sk", "l_discount", ps)
+    // d_agg_median's columns: exactPercentile at 0.5 against median()
+    for (x <- Seq("l_extendedprice", "l_quantity")) {
+      val ref = bits(li.groupBy("l_returnflag").agg(median(col(x))))
+      val got = bits(li.groupBy("l_returnflag")
+        .agg(sortedValues(col(x)).as("xs"))
+        .select(col("l_returnflag"), exactPercentile(col("xs"), 0.5)))
+      assert(ref.nonEmpty && got == ref, s"median($x)")
+    }
   }
 
   test("exact percentile equals percentile() at sf0.001") {

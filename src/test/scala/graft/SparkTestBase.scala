@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,26 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Spark jobs started by `body` on this thread (its own job group, so
+    * work elsewhere in the shared session is not counted). */
+  def jobsIn(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${System.nanoTime}"
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, getClass.getSimpleName)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
 
   override def afterAll(): Unit = super.afterAll() // session shared; never stop
 }

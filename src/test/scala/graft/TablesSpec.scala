@@ -1,8 +1,6 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** `Tables` resolves each input from its parquet footer: the schema Spark
   * would infer, without the schema-inference Spark job. Directories,
@@ -14,26 +12,6 @@ class TablesSpec extends SparkTestBase {
 
   private def tiers: Seq[String] =
     Seq(sfDir, sf01Dir).filter(new File(_).isDirectory)
-
-  /** Spark jobs started by `body` on this thread (its own job group, so
-    * work elsewhere in the shared session is not counted). */
-  private def jobsIn(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBus.drain(sc)
-      n.get
-    } finally sc.removeSparkListener(l)
-  }
 
   test("every table's schema equals Spark's inferred schema, events included") {
     for (d <- tiers; name <- Tables.names) {

@@ -3388,27 +3388,45 @@ class TxnSpec extends SparkTestBase {
   }
 
   test("manifest-pruned planning: the driver collect lands only surviving files") {
-    // at manifest scale the skip predicates must ride INSIDE the live-set
-    // resolution scan: a point read on a clustered table collects ~1 path
-    // on the driver, not the live set — the planner cost that matters at
-    // millions of files (r15 verdict item 5)
+    // past the driver-fold limit the skip predicates must ride INSIDE the
+    // live-set resolution scan: a point read on a clustered table collects
+    // ~1 path on the driver, not the live set — the planner cost that
+    // matters at millions of files. This fixture's few manifest rows fold
+    // on the driver at the default limit, so the distributed pass lowers
+    // the limit to 0 through the test seam.
     val t = TxnTable.fresh(spark, dir("manifest_prune"), manifestThreshold = 0)
-    val rng = new scala.util.Random(13)
-    rng.shuffle((0L until 400L).toList).grouped(100)
-      .foreach(g => t.append(g.map(k => (k, k * 3)).toDF("k", "v")))
-    t.compact(target = 4, clusterBy = Seq("k"))
-    assert(t.read().inputFiles.count(_.contains("/d-")) == 4)
+    val prevLimit = TxnTable.checkpointDriverFileLimit
+    try {
+      TxnTable.checkpointDriverFileLimit = 0L // every manifest distributed
+      val rng = new scala.util.Random(13)
+      rng.shuffle((0L until 400L).toList).grouped(100)
+        .foreach(g => t.append(g.map(k => (k, k * 3)).toDF("k", "v")))
+      t.compact(target = 4, clusterBy = Seq("k"))
+      assert(t.read().inputFiles.count(_.contains("/d-")) == 4)
+      val pt = t.readRange("k", 120, 120)
+      assert(pt.as[(Long, Long)].collect().toSeq == Seq((120L, 360L)))
+      assert(t.lastPlanningCollect == 1,
+        s"planning collected ${t.lastPlanningCollect} paths; must land only " +
+          "the surviving file, not the live set")
+      // a two-file range collects exactly the two candidates
+      assert(t.readRange("k", 95, 105).as[(Long, Long)].collect().length == 11)
+      assert(t.lastPlanningCollect == 2, s"got ${t.lastPlanningCollect}")
+      // content equivalence against the unpruned filtered read, both ways
+      assert(t.readRange("k", 0, 399).count() == 400)
+      assert(t.lastPlanningCollect == 4)
+    } finally TxnTable.checkpointDriverFileLimit = prevLimit
+    // default limit: the same reads fold on the driver — same rows, the
+    // same pruning, and no planning collect at all
     val pt = t.readRange("k", 120, 120)
     assert(pt.as[(Long, Long)].collect().toSeq == Seq((120L, 360L)))
-    assert(t.lastPlanningCollect == 1,
-      s"planning collected ${t.lastPlanningCollect} paths; must land only " +
-        "the surviving file, not the live set")
-    // a two-file range collects exactly the two candidates
-    assert(t.readRange("k", 95, 105).as[(Long, Long)].collect().length == 11)
-    assert(t.lastPlanningCollect == 2, s"got ${t.lastPlanningCollect}")
-    // content equivalence against the unpruned filtered read, both ways
+    assert(pt.inputFiles.count(_.contains("/d-")) == 1)
+    assert(t.lastPlanningCollect == -1, s"got ${t.lastPlanningCollect}")
+    val two = t.readRange("k", 95, 105)
+    assert(two.as[(Long, Long)].collect().length == 11)
+    assert(two.inputFiles.count(_.contains("/d-")) == 2)
+    assert(t.lastPlanningCollect == -1, s"got ${t.lastPlanningCollect}")
     assert(t.readRange("k", 0, 399).count() == 400)
-    assert(t.lastPlanningCollect == 4)
+    assert(t.lastPlanningCollect == -1, s"got ${t.lastPlanningCollect}")
   }
 
   test("path-target SQL DML: DELETE/UPDATE/MERGE on a quoted path, point delete rewrites 1-of-N") {

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   *    here with resolved attributes via `resolvedAttr` — candidate
   *    DISCOVERY then reads commit metadata instead of scanning the
   *    table for its touched files;
-  *  - the `graft-txn` format bridge translates V1 `sources.Filter`s
-  *    separately (`TxnFilters.toSkipPreds` — that surface already hands
-  *    over decomposed conjuncts with external values).
+  *  - the `graft-txn` format bridge: its pushed V1 `sources.Filter`s
+  *    become one `Column` conjunction (`TxnFilters.one`) and take the
+  *    native DML path above.
   *
   * Soundness contract, same as everywhere in the skipping core: an
   * extracted predicate must be implied by the condition (conjuncts

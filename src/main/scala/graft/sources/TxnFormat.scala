@@ -85,8 +85,12 @@ class TxnFormat extends RelationProvider with CreatableRelationProvider
     // a self-join) and bind two different versions — the snapshot a
     // loaded DataFrame documents is the one at load time
     val pinned = if (version < 0) table.currentVersion else version
+    // pushed filters prune FILES through the same extractor every DML
+    // and SQL WHERE uses: their conjunction, analyzed against the table
     new TxnRelation(ctx, () => table.read(pinned),
-      fs => Some(table.readPruned(TxnFilters.toSkipPreds(fs), pinned)))
+      fs => Some(table.readPruned(fs.flatMap(TxnFilters.one)
+        .reduceOption(_ && _).fold(Seq.empty[TxnTable.SkipPred])(
+          table.skipPredsFor(_, pinned)), pinned)))
   }
 
   // ----------------------------------------------------------- batch write
@@ -164,79 +168,6 @@ private[graft] object TxnFilters {
     filters.foldLeft(Option(lit(true))) { (acc, f) =>
       for (a <- acc; c <- one(f)) yield a && c
     }
-
-  /** source.Filter → commit-log SKIP predicates (TxnTable.SkipPred):
-    * each top-level array member is an implicit conjunct; the
-    * translatable point/range/null shapes feed the FILE-level
-    * stats/bloom prune, anything else contributes nothing (Spark
-    * re-evaluates every filter above the bridge, so untranslated forms
-    * cost pruning, never rows). V1 filter values are external JVM types
-    * (String / boxed numerics / java.sql.Date / Timestamp), exactly what
-    * `TxnTable.statsSpace` and the bloom probe accept. */
-  def toSkipPreds(filters: Array[Filter]): Seq[TxnTable.SkipPred] =
-    filters.toSeq.flatMap {
-      case EqualTo(a, v) if v != null => Seq(TxnTable.SkipEq(a, v))
-      case GreaterThan(a, v) =>
-        loPred(a, v)
-      case GreaterThanOrEqual(a, v) =>
-        loPred(a, v)
-      case LessThan(a, v) =>
-        hiPred(a, v)
-      case LessThanOrEqual(a, v) =>
-        hiPred(a, v)
-      case In(a, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-        Seq(TxnTable.SkipIn(a, vs.toIndexedSeq))
-      case IsNull(a) => Seq(TxnTable.SkipNull(a, isNull = true))
-      case IsNotNull(a) => Seq(TxnTable.SkipNull(a, isNull = false))
-      case StringStartsWith(a, prefix) if prefix != null =>
-        Seq(TxnTable.prefixRange(a, prefix))
-      // boolean trees: AND contributes whatever its sides extract
-      // (subset sound); OR requires BOTH sides, else nothing
-      case And(l, r) => toSkipPreds(Array(l, r))
-      case Or(l, r) =>
-        val (as, bs) = (toSkipPreds(Array(l)), toSkipPreds(Array(r)))
-        if (as.nonEmpty && bs.nonEmpty)
-          Seq(TxnTable.SkipOr(Seq(andOf(as), andOf(bs))))
-        else Nil
-      case _ => Nil
-    }
-
-  private def andOf(ps: Seq[TxnTable.SkipPred]): TxnTable.SkipPred =
-    if (ps.size == 1) ps.head else TxnTable.SkipAnd(ps)
-
-  /** `attr >[=] v` / `attr <[=] v` → the matching one-sided skip bound,
-    * numeric stats space or UTF8_BINARY string space. Strict bounds
-    * widen to inclusive — sound at file granularity. */
-  private def loPred(a: String, v: Any): Seq[TxnTable.SkipPred] = v match {
-    case s: String => Seq(TxnTable.SkipStrRange(a, Some(s), None))
-    case other => bd(other).map(b => TxnTable.SkipRange(a, Some(b), None)).toSeq
-  }
-  private def hiPred(a: String, v: Any): Seq[TxnTable.SkipPred] = v match {
-    case s: String => Seq(TxnTable.SkipStrRange(a, None, Some(s)))
-    case other => bd(other).map(b => TxnTable.SkipRange(a, None, Some(b))).toSeq
-  }
-
-  /** External value → stats-space bound (mirrors TxnTable.statsSpace —
-    * kept here only for the V1 range filters, whose values arrive as
-    * plain JVM objects). */
-  private def bd(x: Any): Option[BigDecimal] = x match {
-    case l: Long => Some(BigDecimal(l))
-    case i: Int => Some(BigDecimal(i))
-    case s: Short => Some(BigDecimal(s.toInt))
-    case b: Byte => Some(BigDecimal(b.toInt))
-    case d: Double => Some(BigDecimal(d))
-    // Float.toString keeps the probe inside the footer's float-rendered
-    // bounds (see TxnTable.statsSpace) — toDouble would not
-    case f: Float => Some(BigDecimal(f.toString))
-    // V1 filters hand decimals as external java.math.BigDecimal — the
-    // exact-value space footerStats records int-backed decimal stats in
-    case d: java.math.BigDecimal => Some(BigDecimal(d))
-    case t: java.sql.Timestamp =>
-      Some(BigDecimal(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L))
-    case d: java.sql.Date => Some(BigDecimal(d.toLocalDate.toEpochDay))
-    case d: java.time.LocalDate => Some(BigDecimal(d.toEpochDay))
-    case _ => None
-  }
 }
 
 /** The V1 bridge relation: schema and scans delegate to the inner plan

@@ -24,10 +24,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * schema as StructType JSON — reads bind the log's schema, never a
   * footer-merge pass). A commit stages its parquet files
   * first (invisible to readers — nothing references them), then publishes
-  * the entry for version v+1 via an ATOMIC create-if-absent. Losing the
-  * race throws, the writer re-reads the log and retries against the new
-  * tip: appends always converge; overwrite recomputes its remove-set each
-  * attempt (last-writer-wins on content, never lost-update on the log).
+  * the entry for version v+1 via an ATOMIC create-if-absent. What a lost
+  * race does is one of three policies (see "lost-race policies" below):
+  * `retryAtTip` re-derives the commit at the new tip until it wins
+  * (appends always converge; overwrite recomputes its remove-set each
+  * attempt — last-writer-wins on content, never lost-update on the log),
+  * `publishReconciling` re-claims a staged copy-on-write DML past
+  * provably disjoint commits, and `claimOnce` aborts. Every writer's
+  * commit goes through one of them; the row-level DML (`merge`,
+  * `mergeWhen`, `deleteWhere`, `update`) further share one candidate
+  * scan, touched-file collect, CDC sidecar writer, DV commit and MERGE
+  * stage→publish tail.
   *
   * The atomic primitive here is a hard-link publish (write temp fully,
   * `Files.createLink(target, tmp)` — POSIX-atomic, fails if the version
@@ -539,18 +546,13 @@ final class TxnTable(val spark: SparkSession, val root: String,
       minWriter <= TxnTable.SupportedWriter,
       s"cannot require ($minReader, $minWriter): this build supports " +
         s"(${TxnTable.SupportedReader}, ${TxnTable.SupportedWriter})")
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val (r0, w0) = protocolAt(tip)
+    retryAtTip() { tip =>
+      val (r0, w0) = protocolAt(committed(tip))
       require(minReader >= r0 && minWriter >= w0,
         s"protocol downgrade refused: active ($r0, $w0)")
-      if (tryCommit(tip + 1, "protocol", 0L, Nil, Nil, None, None,
-          protocol = Some((minReader, minWriter))))
-        res = tip + 1
+      tryCommit(tip + 1, "protocol", 0L, Nil, Nil, None, None,
+        protocol = Some((minReader, minWriter)))
     }
-    res
   }
 
   /** Active CHECK/NOT NULL constraints at `v` (name → SQL expression) —
@@ -596,16 +598,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
     (set.keys ++ set.values ++ unset).foreach(s =>
       require(!s.exists(c => c == '\u0001' || c == '\u0002' || c == '\n'),
         s"property keys/values must not contain control separators: $s"))
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val next = propertiesAt(tip) ++ set -- unset
-      if (tryCommit(tip + 1, "props", 0L, Nil, Nil, None, None,
-          props = Some(next)))
-        res = tip + 1
+    retryAtTip() { tip =>
+      val next = propertiesAt(committed(tip)) ++ set -- unset
+      tryCommit(tip + 1, "props", 0L, Nil, Nil, None, None, props = Some(next))
     }
-    res
   }
 
   /** The declared write-time clustering columns at `v` (empty = none). */
@@ -933,6 +929,19 @@ final class TxnTable(val spark: SparkSession, val root: String,
     }
   }
 
+  // ------------------------------------------------------ lost-race policies
+  //
+  // Every version claim goes through one of three policies, chosen by what
+  // a lost claim means for the writer's payload:
+  //  - `retryAtTip`: the payload is re-derived at the new tip and claimed
+  //    again until it wins (append, overwrite, restore, metadata commits);
+  //  - `publishReconciling`: the payload was staged from snapshot vBase and
+  //    re-claims as-is while every intervening commit is provably disjoint
+  //    from it, else aborts (copy-on-write merge, delete, update);
+  //  - `claimOnce`: one claim, abort on loss — the payload cannot be
+  //    re-validated against a moved tip (compact/optimize of a stale
+  //    snapshot, DV sidecars, a fresh table's first commits).
+
   /** Publish an already-staged DML commit with RECONCILIATION on a lost
     * race: when `tryCommit` loses the version slot, re-validate the
     * staged payload against the intervening commits (`reconcilable`) and
@@ -945,24 +954,67 @@ final class TxnTable(val spark: SparkSession, val root: String,
       add: Seq[String], remove: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
       cdc: Option[String], stats: FileStats,
-      guard: Option[(String, BigDecimal, BigDecimal)], what: String,
+      guard: Option[(String, BigDecimal, BigDecimal)],
       props: Option[Map[String, String]] = None): Long = {
-    var v = vBase
-    var res = -1L
-    while (res < 0) {
-      if (tryCommit(v + 1, action, rows, add, remove, None, schema,
-          cdc = cdc, stats = stats, props = props)) res = v + 1
+    @scala.annotation.tailrec
+    def claim(v: Long): Long =
+      if (tryCommit(v, action, rows, add, remove, None, schema,
+          cdc = cdc, stats = stats, props = props)) v
       else {
         val tip = currentVersion
         if (!reconcilable(vBase, tip, remove.toSet, guard))
-          throw new IllegalStateException(
-            s"$what lost the race at v${v + 1} to a conflicting commit; " +
-              "re-run against the new tip")
-        v = tip
+          throw lostRace(action, v, conflicting = true)
+        claim(tip + 1)
       }
-    }
-    res
+    claim(vBase + 1)
   }
+
+  /** RETRY AT THE NEW TIP: `attempt(tip)` re-derives its commit against
+    * `tip` and claims `tip + 1` (true = won); after a lost claim the tip is
+    * re-read and the attempt runs again, so the writer converges however
+    * many others race it. Returns the claimed version — or -1 once
+    * `settled(tip)` finds the writer's work already committed (the
+    * idempotent append's ledger check, re-run on every tip because the
+    * prefix it scanned must be the one the claim lands on). */
+  private def retryAtTip(settled: Long => Boolean = _ => false)(
+      attempt: Long => Boolean): Long = {
+    @scala.annotation.tailrec
+    def from(tip: Long): Long =
+      if (settled(tip)) -1L
+      else if (attempt(tip)) tip + 1
+      else from(currentVersion)
+    from(currentVersion)
+  }
+
+  /** ABORT: one claim of slot `v`; losing it throws `what`'s re-run error. */
+  private def claimOnce(v: Long, what: String)(claim: Long => Boolean): Long =
+    if (claim(v)) v else throw lostRace(what, v)
+
+  /** The one wording of every lost-race error. */
+  private def lostRace(what: String, v: Long,
+      conflicting: Boolean = false): IllegalStateException =
+    new IllegalStateException(what match {
+      case "create" =>
+        s"create lost the race at $root: another writer committed v0"
+      case "clone" =>
+        s"clone lost a race at $root: concurrent writer on a fresh table"
+      case _ => s"$what lost the race at v$v" +
+        (if (conflicting) " to a conflicting commit" else "") +
+        "; re-run against the new tip"
+    })
+
+  /** The committed version `version` names (negative = the tip) — every
+    * read and writer of an existing table refuses an empty log here. */
+  private def committed(version: Long): Long = {
+    val v = if (version < 0) currentVersion else version
+    require(v >= 0, s"no committed version in $root")
+    v
+  }
+
+  /** The schema recorded at committed version `v`. */
+  private def schemaOf(v: Long): org.apache.spark.sql.types.StructType =
+    schemaAt(committed(v)).getOrElse(
+      throw new IllegalStateException(s"no schema recorded at v$v"))
 
   // ------------------------------------------------------------------ write
 
@@ -1135,8 +1187,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * range, never widen it). At 100 TB this hands the cost-based planner
     * post-DML truth for broadcast-vs-shuffle decisions at metadata cost. */
   def tableStats(version: Long = -1L): TxnTable.TableStats = {
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(version)
     val live = liveFiles(v)
     val stats = statsAt(v)
     val raw = live.map(rowCountOf(_, stats)).sum
@@ -1491,12 +1542,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * so no data moves and old files keep resolving. Fails on unknown
     * source or an already-taken target. */
   def renameColumn(oldName: String, newName: String): Long = {
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val sc = schemaAt(tip).getOrElse(
-        throw new IllegalStateException(s"no schema recorded at v$tip"))
+    retryAtTip() { tip =>
+      val sc = schemaOf(tip)
       require(sc.fieldNames.contains(oldName), s"no such column: $oldName")
       require(!sc.fieldNames.contains(newName), s"column exists: $newName")
       require(!constrainedColumns(constraintsAt(tip)).contains(oldName),
@@ -1509,10 +1556,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
             .withMetadata(f.metadata).putString(PhysKey, physicalName(f))
             .build())
       })
-      if (tryCommit(tip + 1, "rename", 0L, Nil, Nil, None, Some(sc2)))
-        res = tip + 1
+      tryCommit(tip + 1, "rename", 0L, Nil, Nil, None, Some(sc2))
     }
-    res
   }
 
   /** DROP a column — a METADATA-ONLY commit: the field leaves the logical
@@ -1520,12 +1565,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * rewrite of each file). A later re-add under the same logical name
     * gets a fresh physical, so the dropped data can never resurface. */
   def dropColumn(name: String): Long = {
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val sc = schemaAt(tip).getOrElse(
-        throw new IllegalStateException(s"no schema recorded at v$tip"))
+    retryAtTip() { tip =>
+      val sc = schemaOf(tip)
       require(sc.fieldNames.contains(name), s"no such column: $name")
       require(sc.fields.length > 1, "cannot drop the last column")
       require(!constrainedColumns(constraintsAt(tip)).contains(name),
@@ -1533,10 +1574,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
           "constraint first")
       val sc2 = org.apache.spark.sql.types.StructType(
         sc.fields.filterNot(_.name == name))
-      if (tryCommit(tip + 1, "drop", 0L, Nil, Nil, None, Some(sc2)))
-        res = tip + 1
+      tryCommit(tip + 1, "drop", 0L, Nil, Nil, None, Some(sc2))
     }
-    res
   }
 
   /** CREATE the table: a schema-only v0 commit (no data files) — the
@@ -1575,11 +1614,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
       identities.map { case (n, (st, sp)) =>
         s"graft.identity.$n" -> s"$st,$sp" } ++
       generated.map { case (n, e) => s"graft.generated.$n" -> e }
-    if (!tryCommit(0L, "create", 0L, Nil, Nil, None, Some(schema),
-        props = if (props.isEmpty) None else Some(props.toMap)))
-      throw new IllegalStateException(
-        s"create lost the race at $root: another writer committed v0")
-    0L
+    claimOnce(0L, "create")(tryCommit(_, "create", 0L, Nil, Nil, None,
+      Some(schema), props = if (props.isEmpty) None else Some(props.toMap)))
   }
 
   /** ALTER TABLE ADD COLUMNS — a METADATA-ONLY commit: the new fields
@@ -1589,12 +1625,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * re-add can never resurrect old bytes. */
   def addColumns(cols: org.apache.spark.sql.types.StructType): Long = {
     val physFor = freshPhysFor()
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val sc = schemaAt(tip).getOrElse(
-        throw new IllegalStateException(s"no schema recorded at v$tip"))
+    retryAtTip() { tip =>
+      val sc = schemaOf(tip)
       cols.fields.foreach(f =>
         require(!sc.fieldNames.contains(f.name), s"column exists: ${f.name}"))
       val fresh = cols.fields.map { f =>
@@ -1602,10 +1634,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
           .withMetadata(f.metadata).putString(PhysKey, physFor(f.name)).build())
       }
       val sc2 = org.apache.spark.sql.types.StructType(sc.fields ++ fresh)
-      if (tryCommit(tip + 1, "addcol", 0L, Nil, Nil, None, Some(sc2)))
-        res = tip + 1
+      tryCommit(tip + 1, "addcol", 0L, Nil, Nil, None, Some(sc2))
     }
-    res
   }
 
   /** ALTER TABLE ADD COLUMN ... GENERATED ALWAYS AS (expr) — a
@@ -1633,12 +1663,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     require(!exprSql.exists(c => c == '\u0001' || c == '\u0002' || c == '\n'),
       "generated expression must be one line without control separators")
     val physFor = freshPhysFor()
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val sc = schemaAt(tip).getOrElse(
-        throw new IllegalStateException(s"no schema recorded at v$tip"))
+    retryAtTip() { tip =>
+      val sc = schemaOf(tip)
       require(!sc.fieldNames.contains(name), s"column exists: $name")
       val fresh = org.apache.spark.sql.types.StructField(name, dataType,
         nullable = true,
@@ -1646,11 +1672,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
           .putString(PhysKey, physFor(name)).build())
       val sc2 = org.apache.spark.sql.types.StructType(sc.fields :+ fresh)
       val props = propertiesAt(tip) + (s"graft.generated.$name" -> exprSql)
-      if (tryCommit(tip + 1, "addcol", 0L, Nil, Nil, None, Some(sc2),
-          props = Some(props)))
-        res = tip + 1
+      tryCommit(tip + 1, "addcol", 0L, Nil, Nil, None, Some(sc2),
+        props = Some(props))
     }
-    res
   }
 
   /** Declared generated columns at `v`: (name, exprSql) in schema order. */
@@ -1714,12 +1738,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
       step: Long = 1L): Long = {
     require(step != 0L, "identity step must be non-zero")
     val physFor = freshPhysFor()
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val sc = schemaAt(tip).getOrElse(
-        throw new IllegalStateException(s"no schema recorded at v$tip"))
+    retryAtTip() { tip =>
+      val sc = schemaOf(tip)
       require(!sc.fieldNames.contains(name), s"column exists: $name")
       val fresh = org.apache.spark.sql.types.StructField(name,
         org.apache.spark.sql.types.LongType, nullable = true,
@@ -1728,11 +1748,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
       val sc2 = org.apache.spark.sql.types.StructType(sc.fields :+ fresh)
       val props = propertiesAt(tip) +
         (s"graft.identity.$name" -> s"$start,$step")
-      if (tryCommit(tip + 1, "addcol", 0L, Nil, Nil, None, Some(sc2),
-          props = Some(props)))
-        res = tip + 1
+      tryCommit(tip + 1, "addcol", 0L, Nil, Nil, None, Some(sc2),
+        props = Some(props))
     }
-    res
   }
 
   /** Declared identity columns at `v`: (name, step, highWater) in name
@@ -1801,11 +1819,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.matches("[A-Za-z0-9_]+"), s"bad constraint name: $name")
     require(!exprSql.contains('\n'), "constraint expression must be one line")
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val existing = constraintsAt(tip)
+    retryAtTip() { tip =>
+      val existing = constraintsAt(committed(tip))
       require(!existing.exists(_._1 == name), s"constraint exists: $name")
       // existing data must already satisfy the constraint
       val bad = read(tip).filter(not(coalesce(expr(exprSql), lit(false))))
@@ -1819,12 +1834,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
       // the auto-bump Delta performs when a CHECK constraint is added
       val (r0, w0) = protocolAt(tip)
       val bump = if (w0 < 2) Some((math.max(r0, 1), 2)) else None
-      if (tryCommit(tip + 1, "constraint", 0L, Nil, Nil, None, None,
-          constraints = Some(existing :+ (name -> exprSql)),
-          protocol = bump))
-        res = tip + 1
+      tryCommit(tip + 1, "constraint", 0L, Nil, Nil, None, None,
+        constraints = Some(existing :+ (name -> exprSql)), protocol = bump)
     }
-    res
   }
 
   /** NOT NULL as a recorded constraint (the enforcement machinery is
@@ -1834,17 +1846,12 @@ final class TxnTable(val spark: SparkSession, val root: String,
 
   /** ALTER TABLE DROP CONSTRAINT. */
   def dropConstraint(name: String): Long = {
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
-      require(tip >= 0, s"no committed version in $root")
-      val existing = constraintsAt(tip)
+    retryAtTip() { tip =>
+      val existing = constraintsAt(committed(tip))
       require(existing.exists(_._1 == name), s"no such constraint: $name")
-      if (tryCommit(tip + 1, "constraint", 0L, Nil, Nil, None, None,
-          constraints = Some(existing.filterNot(_._1 == name))))
-        res = tip + 1
+      tryCommit(tip + 1, "constraint", 0L, Nil, Nil, None, None,
+        constraints = Some(existing.filterNot(_._1 == name)))
     }
-    res
   }
 
   /** Logical column names an active-constraint expression references —
@@ -1881,7 +1888,6 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * `appendIdempotent` for why the scan+claim pair is race-free. */
   private def appendCommit(df: DataFrame, txn: Option[(String, Long)]): Long = {
     val physFor = freshPhysFor()
-    var res = -2L
     // staging happens against the tip's column mapping; if a retry finds
     // the mapping moved (a concurrent rename landed between staging and
     // the claim), the files are re-staged under the new physicals — the
@@ -1889,67 +1895,60 @@ final class TxnTable(val spark: SparkSession, val root: String,
     var stagedProj: Seq[String] = null
     var files: Seq[String] = Nil; var rows = 0L
     var fstats: FileStats = Map.empty
-    while (res == -2L) {
-      val tip = currentVersion
-      if (txn.exists { case (app, b) => committedUpTo(app, tip) >= b }) res = -1L
-      else {
-        // generated columns: computed at stage time, rejected if written
-        // directly — and part of the staging fingerprint like constraints
-        val gens = generatedAt(tip)
-        val dfG0 = withGenerated(df, tip, rejectExplicit = true)
-        // identity columns: ids allocate above the tip's high-water mark,
-        // the new mark committed ATOMICALLY with the data (props below);
-        // the mark is part of the fingerprint, so a lost race to any
-        // other ALLOCATING commit re-derives the whole range at the new
-        // tip. The fingerprint is computed BEFORE running the allocation
-        // (identity column names/schema are known without it — the table
-        // schema at tip already carries the declared columns), so a
-        // retry whose fingerprint is unchanged reuses the staged files
-        // AND recomputes the hw delta arithmetically from the staged row
-        // count instead of re-paying the persist + count + zipWithIndex
-        // allocation jobs just to re-derive the same numbers.
-        val ids = identityAt(tip)
-        val idsFp = ids.map { case (n, s, hw) => s"id:$n:$s:$hw" }
-        val sc = unionSchema(schemaAt(tip), dfG0.schema, physFor)
-        val cs = constraintsAt(tip)
-        // the staging fingerprint includes the ACTIVE constraint set: a
-        // concurrent ADD CONSTRAINT landing mid-retry forces a re-stage
-        // under the new validation, so no unvalidated row can commit
-        // the fingerprint also carries the declared clustering: a layout
-        // change mid-retry re-stages under the new sort (a hint, but a
-        // cheap one to honor exactly)
-        val cb = declaredClusterBy(tip)
-        val proj = (dfG0.columns.toSeq ++ ids.map(_._1))
-          .map(physicalIn(Some(sc), _)) ++
-          cs.map { case (n, e) => s"c:$n:$e" } ++ cb.map("cb:" + _) ++
-          gens.map { case (n, e) => s"g:$n:$e" } ++ idsFp
-        var hwDelta: Map[String, String] = Map.empty
-        if (stagedProj == null || proj != stagedProj) {
+    retryAtTip(settled = tip =>
+        txn.exists { case (app, b) => committedUpTo(app, tip) >= b }) { tip =>
+      // generated columns: computed at stage time, rejected if written
+      // directly — and part of the staging fingerprint like constraints
+      val gens = generatedAt(tip)
+      val dfG0 = withGenerated(df, tip, rejectExplicit = true)
+      // identity columns: ids allocate above the tip's high-water mark,
+      // the new mark committed ATOMICALLY with the data (props below);
+      // the mark is part of the fingerprint, so a lost race to any
+      // other ALLOCATING commit re-derives the whole range at the new
+      // tip. The fingerprint is computed BEFORE running the allocation
+      // (identity column names/schema are known without it — the table
+      // schema at tip already carries the declared columns), so a
+      // retry whose fingerprint is unchanged reuses the staged files
+      // AND recomputes the hw delta arithmetically from the staged row
+      // count instead of re-paying the persist + count + zipWithIndex
+      // allocation jobs just to re-derive the same numbers.
+      val ids = identityAt(tip)
+      val idsFp = ids.map { case (n, s, hw) => s"id:$n:$s:$hw" }
+      val sc = unionSchema(schemaAt(tip), dfG0.schema, physFor)
+      val cs = constraintsAt(tip)
+      // the staging fingerprint includes the ACTIVE constraint set: a
+      // concurrent ADD CONSTRAINT landing mid-retry forces a re-stage
+      // under the new validation, so no unvalidated row can commit
+      // the fingerprint also carries the declared clustering: a layout
+      // change mid-retry re-stages under the new sort (a hint, but a
+      // cheap one to honor exactly)
+      val cb = declaredClusterBy(tip)
+      val proj = (dfG0.columns.toSeq ++ ids.map(_._1))
+        .map(physicalIn(Some(sc), _)) ++
+        cs.map { case (n, e) => s"c:$n:$e" } ++ cb.map("cb:" + _) ++
+        gens.map { case (n, e) => s"g:$n:$e" } ++ idsFp
+      val hwDelta: Map[String, String] =
+        if (proj != stagedProj) {
           val (dfG, delta, idCleanup) = withIdentity(dfG0, tip)
           try {
             val r = stage(toPhysical(enforced(clusterFor(dfG, cb), cs), sc))
             files = r._1; rows = r._2; fstats = r._3
           } finally idCleanup()
-          hwDelta = delta
           stagedProj = proj
-        } else {
-          // unchanged fingerprint ⇒ same hw, same metadata: the staged
-          // ids are exactly what a fresh allocation at this tip would
-          // hand out, so the delta is hw + step·rows per column
-          hwDelta =
-            if (rows == 0L) Map.empty
-            else ids.map { case (name, step, hw) =>
-              s"graft.identityHw.$name" -> (hw + step * rows).toString
-            }.toMap
+          delta
         }
-        if (tryCommit(tip + 1, "append", rows, files, Nil, txn, Some(sc),
-            stats = fstats,
-            props = if (hwDelta.isEmpty) None
-              else Some(propertiesAt(tip) ++ hwDelta)))
-          res = tip + 1
-      }
+        // unchanged fingerprint ⇒ same hw, same metadata: the staged ids
+        // are exactly what a fresh allocation at this tip would hand
+        // out, so the delta is hw + step·rows per column
+        else if (rows == 0L) Map.empty
+        else ids.map { case (name, step, hw) =>
+          s"graft.identityHw.$name" -> (hw + step * rows).toString
+        }.toMap
+      tryCommit(tip + 1, "append", rows, files, Nil, txn, Some(sc),
+        stats = fstats,
+        props = if (hwDelta.isEmpty) None
+          else Some(propertiesAt(tip) ++ hwDelta))
     }
-    res
   }
 
   def append(df: DataFrame): Long = appendCommit(df, None)
@@ -2001,18 +2000,15 @@ final class TxnTable(val spark: SparkSession, val root: String,
     var stagedUnder: (Seq[(String, String)], Seq[String]) = null
     var files: Seq[String] = Nil; var rows = 0L
     var fstats: FileStats = Map.empty
-    var done = false; var v = -1L
     var stagedDf: DataFrame = null
     var hwDelta: Map[String, String] = Map.empty
-    while (!done) {
-      val tip = currentVersion
-      v = tip + 1
+    retryAtTip() { tip =>
       val cs = constraintsAt(tip)
       val cb = declaredClusterBy(tip)
-      if (stagedUnder == null ||
-          (cs, cb ++ generatedAt(tip).map(g => s"g:${g._1}:${g._2}") ++
-            identityAt(tip).map(i => s"id:${i._1}:${i._2}:${i._3}"))
-            != stagedUnder) {
+      val fingerprint = (cs,
+        cb ++ generatedAt(tip).map(g => s"g:${g._1}:${g._2}") ++
+          identityAt(tip).map(i => s"id:${i._1}:${i._2}:${i._3}"))
+      if (fingerprint != stagedUnder) {
         // generated columns compute here too (and reject explicit values)
         // — an overwrite replaces content, not the declared rules; ditto
         // identity: the high water keeps rising across the reset (the
@@ -2024,20 +2020,17 @@ final class TxnTable(val spark: SparkSession, val root: String,
           val r = stage(enforced(clusterFor(dfG, cb), cs))
           files = r._1; rows = r._2; fstats = r._3
         } finally idCleanup()
-        stagedUnder = (cs,
-          cb ++ generatedAt(tip).map(g => s"g:${g._1}:${g._2}") ++
-            identityAt(tip).map(i => s"id:${i._1}:${i._2}:${i._3}"))
+        stagedUnder = fingerprint
         stagedDf = dfG
       }
-      val gone = if (v == 0) Nil else liveFiles(v - 1)
+      val gone = if (tip < 0) Nil else liveFiles(tip)
       // an overwrite REPLACES content, so it resets the schema to its own
       // (dropping columns via overwrite is legitimate; via append it isn't)
-      done = tryCommit(v, "overwrite", rows, files, gone, None,
+      tryCommit(tip + 1, "overwrite", rows, files, gone, None,
         Some(stagedDf.schema), stats = fstats,
         props = if (hwDelta.isEmpty) None
           else Some(propertiesAt(tip) ++ hwDelta))
     }
-    v
   }
 
   /** Rewrite the current live set into `target` files with identical
@@ -2068,13 +2061,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // are staged under physicals like every other commit
     val sc = schemaAt(v).getOrElse(compacted.schema)
     val (files, rows, fstats) = stage(toPhysical(compacted, sc))
-    val done = tryCommit(v + 1, "compact", rows, files, gone, None,
-      Some(sc), stats = fstats)
     // a concurrent commit moved the tip: compaction of a stale snapshot
     // must NOT clobber it — give up rather than drop the newer data
-    if (!done) throw new IllegalStateException(
-      s"compact lost the race at v${v + 1}; re-run against the new tip")
-    v + 1
+    claimOnce(v + 1, "compact")(tryCommit(_, "compact", rows, files, gone,
+      None, Some(sc), stats = fstats))
   }
 
   /** Incremental OPTIMIZE: bin-pack only the live files SMALLER than
@@ -2138,8 +2128,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     require(targetRows > 0, s"targetRows must be positive, got $targetRows")
     require(clusterBy.isEmpty || zorderBy.isEmpty,
       "choose clusterBy OR zorderBy, not both")
-    val v = currentVersion
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(currentVersion)
     val stats = statsAt(v)
     // OPTIMIZE ... WHERE: scope the candidate set to files the
     // predicate's extractable conjuncts ADMIT (stats/bloom skipping —
@@ -2166,11 +2155,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
       else base.repartitionByRange(bins, cb.map(col): _*)
         .sortWithinPartitions(cb.map(col): _*)
     val (files, rows, fstats) = stage(toPhysical(packed, sc))
-    if (!tryCommit(v + 1, "compact", rows, files, small, None, Some(sc),
-        stats = fstats))
-      throw new IllegalStateException(
-        s"optimize lost the race at v${v + 1}; re-run against the new tip")
-    v + 1
+    claimOnce(v + 1, "optimize")(tryCommit(_, "compact", rows, files, small,
+      None, Some(sc), stats = fstats))
   }
 
   /** RESTORE (rollback) to the table state at `toVersion`, as a NEW
@@ -2208,19 +2194,14 @@ final class TxnTable(val spark: SparkSession, val root: String,
       val df0 = read(toVersion)
       val (files, rows, fstats) =
         stage(schemaAt(toVersion).fold(df0)(toPhysical(df0, _)))
-      var v = -1L; var done = false
-      while (!done) {
-        v = currentVersion + 1
-        done = tryCommit(v, "restore", rows, files, liveFiles(v - 1), None,
+      return retryAtTip() { tip =>
+        tryCommit(tip + 1, "restore", rows, files, liveFiles(tip), None,
           schemaAt(toVersion), stats = fstats,
           constraints = Some(constraintsAt(toVersion)),
           props = Some(propertiesAt(toVersion)))
       }
-      return v
     }
-    var res = -2L
-    while (res == -2L) {
-      val tip = currentVersion
+    retryAtTip() { tip =>
       val target = liveFiles(toVersion)
       val curLive = liveFiles(tip).toSet
       val add = target.filterNot(curLive)
@@ -2230,14 +2211,12 @@ final class TxnTable(val spark: SparkSession, val root: String,
           "was vacuumed; recover it from a backup or restore to a newer version")
       }
       val prior = statsAt(toVersion)
-      if (tryCommit(tip + 1, "restore", parquetRowCount(add), add, remove,
-          None, schemaAt(toVersion),
-          stats = add.flatMap(f => prior.get(f).map(f -> _)).toMap,
-          constraints = Some(constraintsAt(toVersion)),
-          props = Some(propertiesAt(toVersion))))
-        res = tip + 1
+      tryCommit(tip + 1, "restore", parquetRowCount(add), add, remove,
+        None, schemaAt(toVersion),
+        stats = add.flatMap(f => prior.get(f).map(f -> _)).toMap,
+        constraints = Some(constraintsAt(toVersion)),
+        props = Some(propertiesAt(toVersion)))
     }
-    res
   }
 
   /** ZERO-COPY CLONE: materialize this table's snapshot at `version`
@@ -2257,8 +2236,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * a copy per file, same semantics. Refuses if `destRoot` already
     * holds a table. */
   def cloneTo(destRoot: String, version: Long = -1L): TxnTable = {
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(version)
     val destP = Paths.get(destRoot)
     require(!Files.isDirectory(destP.resolve("_txn_log")),
       s"clone destination already holds a table: $destRoot")
@@ -2293,27 +2271,23 @@ final class TxnTable(val spark: SparkSession, val root: String,
           ()
       }
     }
-    val sc = schemaAt(v).getOrElse(
-      throw new IllegalStateException(s"no schema recorded at v$v of $root"))
+    val sc = schemaOf(v)
     dest.create(sc) // v0
     val srcStats = statsAt(v)
     val (r0, w0) = protocolAt(v)
-    if (!dest.tryCommit(1L, "restore", files.map(rowCountOf(_, srcStats)).sum,
-        files, Nil, None, Some(sc),
-        stats = files.flatMap(f => srcStats.get(f).map(f -> _)).toMap,
-        protocol = if (r0 > 1 || w0 > 1) Some((r0, w0)) else None,
-        constraints = Some(constraintsAt(v)).filter(_.nonEmpty),
-        props = Some(propertiesAt(v)).filter(_.nonEmpty)))
-      throw new IllegalStateException(
-        s"clone lost a race at $destRoot: concurrent writer on a fresh table")
+    dest.claimOnce(1L, "clone")(dest.tryCommit(_, "restore",
+      files.map(rowCountOf(_, srcStats)).sum, files, Nil, None, Some(sc),
+      stats = files.flatMap(f => srcStats.get(f).map(f -> _)).toMap,
+      protocol = if (r0 > 1 || w0 > 1) Some((r0, w0)) else None,
+      constraints = Some(constraintsAt(v)).filter(_.nonEmpty),
+      props = Some(propertiesAt(v)).filter(_.nonEmpty)))
     dvs.foreach { dv =>
       // one commit per sidecar, mirroring how the source recorded it;
       // rows = the sidecar's own entry count (exact, KB driver read)
       val n = parquetRowCountAbs(destP, dv)
-      var done = false
-      while (!done)
-        done = dest.tryCommit(dest.currentVersion + 1, "delete", n,
-          Nil, Nil, None, None, dv = Some(dv))
+      dest.retryAtTip() { tip =>
+        dest.tryCommit(tip + 1, "delete", n, Nil, Nil, None, None, dv = Some(dv))
+      }
     }
     dest
   }
@@ -2332,29 +2306,6 @@ final class TxnTable(val spark: SparkSession, val root: String,
 
   // ------------------------------------------------------------------- read
 
-  /** Snapshot with per-row provenance columns appended — `_f` (table-
-    * relative file path) and `_idx` (row position within the file, the
-    * parquet `_metadata.row_index` generated column) — and every deletion
-    * vector committed at ≤ `version` already applied (an anti-join on
-    * (file, position) against the DV sidecars: rows a DV marks deleted
-    * never surface). `merge`/`deleteWhere` build on the tags; `read`
-    * drops them. */
-  private def readTagged(version: Long): DataFrame = {
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
-    scanTagged(v, liveFiles(v))
-  }
-
-  /** The tagged scan a DML's matched-row DISCOVERY runs over: the
-    * condition's extractable conjuncts (shared `SkipExtract` core, with
-    * the table's column names resolving the unresolved API attributes)
-    * prune the candidate files from COMMIT METADATA first — a point
-    * delete/update on a clustered or bloomed column then discovers its
-    * touched set without scanning the table, the same shape `merge`
-    * already had for its key range. Files the stats cannot exclude scan
-    * as before; a condition with no extractable conjunct scans the live
-    * set — discovery pruning can only skip files PROVABLY free of
-    * matches, never change which rows match. */
   /** The declared schema at `v` WITHOUT mapping metadata — what an API
     * condition resolves against (identical to the snapshot frame's
     * logical surface). */
@@ -2365,55 +2316,47 @@ final class TxnTable(val spark: SparkSession, val root: String,
       StructField(f.name, f.dataType, f.nullable))))
   }
 
-  /** Skip predicates extractable from an API `Column` condition at `v`:
-    * resolve `cond` against an EMPTY frame of the declared schema (full
-    * analysis — name resolution + type coercion — with zero file
-    * access), then extract from the RESOLVED condition, the same
-    * battle-tested path the SQL rule takes. Any analysis failure falls
-    * back to no predicates (the real consumer will surface the error
-    * with its own context). Shared by DML matched-row discovery and
-    * `OPTIMIZE ... WHERE` candidate scoping. */
-  private def skipPredsFor(cond: org.apache.spark.sql.Column,
-      v: Long): Seq[TxnTable.SkipPred] =
-    plainSchemaAt(v).map { sc =>
-      scala.util.Try {
-        val empty = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
-        val analyzed = empty.filter(cond)
-          .asInstanceOf[org.apache.spark.sql.classic.Dataset[
-            org.apache.spark.sql.Row]]
-          .queryExecution.analyzed
-        analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            SkipExtract.preds(f.condition,
-              SkipExtract.resolvedAttr(f.child.outputSet))
-        }.getOrElse(Nil)
-      }.getOrElse(Nil)
-    }.getOrElse(Nil)
-
-  /** Exact all-match predicates for `cond` at `v` — Some only when the
-    * WHOLE condition translates as an equivalence (SkipExtract.
-    * exactPreds); any analysis failure or opaque conjunct yields None
-    * and the metadata-only delete path stays off. Resolution mirrors
-    * `skipPredsFor` exactly (same empty-frame analysis), so the
-    * translation sees the very tree the scan-side filter would. */
-  private def exactAllFor(cond: org.apache.spark.sql.Column,
-      v: Long): Option[Seq[TxnTable.AllPred]] =
+  /** An API `Column` condition at `v`, RESOLVED against an EMPTY frame
+    * of the declared schema (full analysis — name resolution + type
+    * coercion — with zero file access): the analyzed Filter the
+    * translators below read, the same battle-tested tree the SQL rule
+    * sees. Any analysis failure yields None (the real consumer will
+    * surface the error with its own context). */
+  private def analyzedFilter(cond: org.apache.spark.sql.Column, v: Long)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.Filter] =
     plainSchemaAt(v).flatMap { sc =>
       scala.util.Try {
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
-        val analyzed = empty.filter(cond)
+        empty.filter(cond)
           .asInstanceOf[org.apache.spark.sql.classic.Dataset[
             org.apache.spark.sql.Row]]
-          .queryExecution.analyzed
-        analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            val types = f.child.output.map(a => a.name -> a.dataType).toMap
-            SkipExtract.exactPreds(f.condition,
-              SkipExtract.resolvedAttr(f.child.outputSet), types.get)
-        }.flatten
+          .queryExecution.analyzed.collectFirst {
+            case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+          }
       }.toOption.flatten
+    }
+
+  /** Skip predicates extractable from an API `Column` condition at `v`
+    * (none when it does not analyze). Shared by DML matched-row
+    * discovery, `OPTIMIZE ... WHERE` candidate scoping and the
+    * `graft-txn` format bridge's pushed filters. */
+  private[graft] def skipPredsFor(cond: org.apache.spark.sql.Column,
+      v: Long): Seq[TxnTable.SkipPred] =
+    analyzedFilter(cond, v).fold(Seq.empty[TxnTable.SkipPred])(f =>
+      SkipExtract.preds(f.condition,
+        SkipExtract.resolvedAttr(f.child.outputSet)))
+
+  /** Exact all-match predicates for `cond` at `v` — Some only when the
+    * WHOLE condition translates as an equivalence (SkipExtract.
+    * exactPreds); any analysis failure or opaque conjunct yields None
+    * and the metadata-only delete path stays off. */
+  private def exactAllFor(cond: org.apache.spark.sql.Column,
+      v: Long): Option[Seq[TxnTable.AllPred]] =
+    analyzedFilter(cond, v).flatMap { f =>
+      val types = f.child.output.map(a => a.name -> a.dataType).toMap
+      SkipExtract.exactPreds(f.condition,
+        SkipExtract.resolvedAttr(f.child.outputSet), types.get)
     }
 
   /** Live files at `v` whose commit stats PROVE every row satisfies
@@ -2444,80 +2387,74 @@ final class TxnTable(val spark: SparkSession, val root: String,
     }
   }
 
-  private def taggedCandidates(cond: org.apache.spark.sql.Column,
-      v: Long, exclude: Set[String] = Set.empty): DataFrame = {
-    val plainSchema = plainSchemaAt(v)
-    val candidates = filesSurviving(v, skipPredsFor(cond, v))
-      .filterNot(exclude)
+  /** The tagged scan over the live files at `v` that ANY of the `anyOf`
+    * skip-predicate sets admits (an empty set admits every live file;
+    * several sets scan their sorted union), minus `exclude` — where every row-level DML discovers its touched
+    * files. Commit metadata prunes first: a point delete/update/merge on
+    * a clustered or bloomed column discovers its touched set without
+    * scanning the table, and pruning can only skip files PROVABLY free
+    * of matches, never change which rows match. No candidate means no
+    * row can match: the EMPTY tagged frame, without touching a file. */
+  private def candidateScan(v: Long, anyOf: Seq[Seq[TxnTable.SkipPred]],
+      exclude: Set[String] = Set.empty): DataFrame = {
+    val candidates = anyOf.map(filesSurviving(v, _))
+      .reduce((a, b) => (a ++ b).distinct.sorted).filterNot(exclude)
     if (candidates.nonEmpty) scanTagged(v, candidates)
-    else plainSchema match {
-      // zero candidates: the condition provably matches nothing — an
-      // EMPTY tagged frame without touching any file
+    else plainSchemaAt(v) match {
       case Some(sc) =>
         import org.apache.spark.sql.functions.lit
         spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
           .withColumn("_f", lit("").cast("string"))
           .withColumn("_idx", lit(0L))
-      case None => readTagged(v).limit(0)
+      case None => scanTagged(v, liveFiles(v)).limit(0)
     }
   }
 
-  /** The PLAIN schema-bound scan over a file subset: physical column
-    * names on disk, aliased back to logicals — no provenance columns, so
-    * the plan is exactly the parquet scan (the shape `read` uses when no
-    * deletion vector is active). */
-  private def scanPlain(v: Long, relFiles: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val files = relFiles.map(abs)
-    val logical = schemaAt(v)
-    val base = logical match {
-      case Some(sc) => spark.read.schema(StructType(sc.fields.map(f =>
-        StructField(physicalName(f), f.dataType, f.nullable)))).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
-    val st = withLeafStats(base, v, relFiles)
-    logical match {
-      case Some(sc) if sc.fields.exists(f => physicalName(f) != f.name) =>
-        st.select(sc.fields.toSeq.map(f =>
-          col(s"`${physicalName(f)}`").as(f.name)): _*)
-      case _ => st
-    }
-  }
-
-  /** The tagged scan over an explicit file subset (the prune hook
-    * `readRange` uses). */
-  private def scanTagged(v: Long, relFiles: Seq[String]): DataFrame = {
+  /** The schema-bound parquet scan over a file subset. The LOG schema
+    * drives it under its PHYSICAL column names (what the files contain):
+    * files staged before an additive evolution lack the new physicals
+    * and read as NULL — no footer merge pass, no file rewrite — and the
+    * columns alias back to logicals only when a mapping actually exists.
+    * Untagged, the plan is exactly the parquet scan; `tagged` adds the
+    * per-row provenance columns `_f` (table-relative file path) and
+    * `_idx` (row position within the file, the parquet
+    * `_metadata.row_index` generated column). */
+  private def scanFiles(v: Long, relFiles: Seq[String],
+      tagged: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{StructField, StructType}
     val files = relFiles.map(abs)
     val logical = schemaAt(v)
-    val base0 = logical match {
-      // the LOG schema drives the scan — under its PHYSICAL column names
-      // (what the files contain): files staged before an additive
-      // evolution lack the new physicals and read as NULL — no footer
-      // merge pass, no file rewrite
+    val base = withLeafStats(logical match {
       case Some(sc) => spark.read.schema(StructType(sc.fields.map(f =>
         StructField(physicalName(f), f.dataType, f.nullable)))).parquet(files: _*)
       case None => spark.read.parquet(files: _*)
-    }
-    val base0s = withLeafStats(base0, v, relFiles)
+    }, v, relFiles)
     // table-relative tag: strip everything up to and including the table
     // root by POSITION (instr), not by an assumed scheme prefix — the
     // metadata column spells the URI "file:/abs" with a single slash
     val marker = rootP.toAbsolutePath.toString + "/"
-    val base1 = base0s
-      .withColumn("_f", expr("substring(_metadata.file_path, " +
-        s"instr(_metadata.file_path, '$marker') + ${marker.length})"))
-      .withColumn("_idx", col("_metadata.row_index"))
-    // physical → logical aliasing (only when a mapping actually exists)
-    val base = logical match {
+    val tags = if (!tagged) Nil else Seq(
+      expr("substring(_metadata.file_path, " +
+        s"instr(_metadata.file_path, '$marker') + ${marker.length})").as("_f"),
+      col("_metadata.row_index").as("_idx"))
+    logical match {
       case Some(sc) if sc.fields.exists(f => physicalName(f) != f.name) =>
-        base1.select(sc.fields.toSeq.map(f =>
-          col(s"`${physicalName(f)}`").as(f.name)) :+ col("_f") :+ col("_idx"): _*)
-      case _ => base1
+        base.select(sc.fields.toSeq.map(f =>
+          col(s"`${physicalName(f)}`").as(f.name)) ++ tags: _*)
+      case _ if tagged => base.select(col("*") +: tags: _*)
+      case _ => base
     }
+  }
+
+  /** The tagged scan over a file subset with every deletion vector
+    * committed at ≤ `v` already applied (an anti-join on (file,
+    * position) against the DV sidecars: rows a DV marks deleted never
+    * surface). Row-level DML builds on the tags. */
+  private def scanTagged(v: Long, relFiles: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val base = scanFiles(v, relFiles, tagged = true)
     val dvs = dvsAt(v)
     if (dvs.isEmpty) base
     else base.join(
@@ -2526,17 +2463,21 @@ final class TxnTable(val spark: SparkSession, val root: String,
       col("_f") === col("_dvp") && col("_idx") === col("_dvi"), "left_anti")
   }
 
+  /** The snapshot scan over a file subset at `v`: with no active deletion
+    * vector (the overwhelmingly common case) the BARE schema-bound
+    * parquet scan — no provenance columns, no metadata struct, so
+    * pushdown/prune reach the scan with nothing in the way — else the
+    * DV-applied tagged scan with its tags dropped. */
+  private def scan(v: Long, files: Seq[String]): DataFrame =
+    if (dvsAt(v).isEmpty) scanFiles(v, files, tagged = false)
+    else scanTagged(v, files).drop("_f", "_idx")
+
   /** Snapshot read at `version` (default: latest). The returned plan scans
-    * exactly the files live at that version, minus any DV-deleted rows.
-    * With no active deletion vector (the overwhelmingly common case) the
-    * plan is the BARE schema-bound parquet scan — no provenance columns,
-    * no metadata struct, so pushdown/prune reach the scan with nothing in
-    * the way. */
+    * exactly the files live at that version, minus any DV-deleted rows
+    * (`scan`: the bare parquet scan when no DV is active). */
   def read(version: Long = -1L): DataFrame = {
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
-    if (dvsAt(v).isEmpty) scanPlain(v, liveFiles(v))
-    else readTagged(v).drop("_f", "_idx")
+    val v = committed(version)
+    scan(v, liveFiles(v))
   }
 
   /** Range read with FILE-LEVEL data skipping: live files whose commit-
@@ -2567,12 +2508,9 @@ final class TxnTable(val spark: SparkSession, val root: String,
   def readRangeStr(colName: String, lo: String, hi: String,
       version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
-    val files = filesSurviving(v,
-      Seq(TxnTable.SkipStrRange(colName, Some(lo), Some(hi))))
-    (if (dvsAt(v).isEmpty) scanPlain(v, files)
-     else scanTagged(v, files).drop("_f", "_idx"))
+    val v = committed(version)
+    scan(v, filesSurviving(v,
+      Seq(TxnTable.SkipStrRange(colName, Some(lo), Some(hi)))))
       .filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
@@ -2605,18 +2543,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * with provenance tags dropped; the caller applies the exact filter. */
   private def readRangePhys(colName: String, loB: BigDecimal, hiB: BigDecimal,
       version: Long): DataFrame = {
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
-    val files = pruneFiles(v, colName, loB, hiB)
-    if (dvsAt(v).isEmpty) scanPlain(v, files)
-    else scanTagged(v, files).drop("_f", "_idx")
+    val v = committed(version)
+    scan(v, filesSurviving(v,
+      Seq(TxnTable.SkipRange(colName, Some(loB), Some(hiB)))))
   }
-
-  /** Live files at `v` whose recorded [min, max] for `colName` can
-    * intersect [loB, hiB]; files without stats for the column are kept. */
-  private def pruneFiles(v: Long, colName: String,
-      loB: BigDecimal, hiB: BigDecimal): Seq[String] =
-    filesSurviving(v, Seq(TxnTable.SkipRange(colName, Some(loB), Some(hiB))))
 
   /** A point value in the STATS comparison space — see the static
     * `TxnTable.statsSpace` (shared with the executor-side admission). */
@@ -2724,11 +2654,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * caller who would treat it as the filtered result. */
   private[graft] def readPruned(preds: Seq[TxnTable.SkipPred],
       version: Long = -1L): DataFrame = {
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
-    val files = filesSurviving(v, preds)
-    if (dvsAt(v).isEmpty) scanPlain(v, files)
-    else scanTagged(v, files).drop("_f", "_idx")
+    val v = committed(version)
+    scan(v, filesSurviving(v, preds))
   }
 
   /** NULL-predicate read with FILE-LEVEL data skipping from the
@@ -2870,6 +2797,78 @@ final class TxnTable(val spark: SparkSession, val root: String,
     }
   }
 
+  // ------------------------------------------------- row-level DML, shared
+
+  /** The touched-file set of a row-level DML: the sorted distinct `_f`
+    * provenance tags of `rows` — a collect ∝ touched files, never table
+    * size. */
+  private def touchedFiles(rows: DataFrame): Seq[String] =
+    rows.select("_f").distinct().collect().map(_.getString(0)).toSeq.sorted
+
+  /** The commit's change-data-feed sidecar (`_cdc/c-<uuid>`) when `on`:
+    * `changes` (rows tagged `_change_type`) is written AT COMMIT TIME,
+    * because the commit destroys or hides the pre-images it records. */
+  private def cdcSidecar(on: Boolean)(changes: => DataFrame): Option[String] =
+    if (!on) None else {
+      val rel = s"_cdc/c-${UUID.randomUUID()}"
+      changes.write.parquet(abs(rel))
+      Some(rel)
+    }
+
+  /** The merge-on-read commit `deleteWhere` and `update` share: the
+    * `matched` rows' (file, position) pairs become a DELETION VECTOR
+    * sidecar (`_dv/dv-<uuid>`), and unless it is empty (nothing matched:
+    * no commit, `v` returned) ONE claim of v + 1 publishes it together
+    * with what `adds` stages for the DV'd row count — (files, rows,
+    * stats) of the entry. A DV is never re-validated against a moved
+    * tip, so a lost race aborts. */
+  private def commitDv(v: Long, action: String, matched: DataFrame,
+      cdc: => Option[String])(
+      adds: Long => (Seq[String], Long, FileStats)): Long = {
+    import org.apache.spark.sql.functions.col
+    val rel = s"_dv/dv-${UUID.randomUUID()}"
+    matched.select(col("_f").as("path"), col("_idx").as("row_idx"))
+      .write.parquet(abs(rel))
+    val n = parquetRowCountAbs(rootP, rel)
+    if (n == 0) return v
+    val (files, rows, fstats) = adds(n)
+    claimOnce(v + 1, action)(tryCommit(_, action, rows, files, Nil, None,
+      schemaAt(v), dv = Some(rel), cdc = cdc, stats = fstats))
+  }
+
+  /** The copy-on-write tail both MERGE engines end in: range-cluster the
+    * `merged` rewrite on `cb` into ≥ one file per removed file, enforce
+    * the active constraints, stage it under the table schema evolved by
+    * `evolved`'s additive columns (the identity allocation released
+    * after), then publish with reconciliation. Lost publish races
+    * re-validate and re-claim WITHOUT re-staging when every intervening
+    * commit is provably disjoint (file sets + the `keyRange` of head key
+    * `keyCol`; None fails closed) — two merges on disjoint key ranges
+    * each stage exactly once. With an identity allocation in play the
+    * commit carries the new high-water props; reconcilable's props check
+    * then refuses any intervening ALLOCATING commit, so a raced id range
+    * is re-derived by the caller's re-run, never re-claimed. */
+  private def publishMerge(v: Long, merged: DataFrame,
+      evolved: org.apache.spark.sql.types.StructType, cb: Seq[String],
+      remove: Seq[String], cdcRel: Option[String], keyCol: String,
+      keyRange: Option[(BigDecimal, BigDecimal)],
+      hwDelta: Map[String, String], idCleanup: () => Unit): Long = {
+    import org.apache.spark.sql.functions.col
+    val byCb = cb.map(c => col(s"`$c`"))
+    val staged =
+      if (cb.isEmpty) merged
+      else merged.repartitionByRange(math.max(1, remove.size), byCb: _*)
+        .sortWithinPartitions(byCb: _*)
+    val sc = unionSchema(schemaAt(v), evolved, freshPhysFor())
+    val (files, rows, fstats) =
+      try stage(toPhysical(enforced(staged, constraintsAt(v)), sc))
+      finally idCleanup()
+    publishReconciling(v, "merge", rows, files, remove, Some(sc), cdcRel,
+      fstats, keyRange.map { case (lo, hi) =>
+        (physicalIn(Some(sc), keyCol), lo, hi) },
+      props = if (hwDelta.isEmpty) None else Some(propertiesAt(v) ++ hwDelta))
+  }
+
   /** MERGE (upsert) at FILE granularity — the table format's DML: rows of
     * `updates` replace same-key rows, new keys append. Only files that
     * actually CONTAIN a matched key are rewritten; every untouched file
@@ -2885,9 +2884,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * refused loudly — they would inherit the same stored id, and no
     * surrogate-keyed table can absorb that.
     * Runs as ONE transaction: remove
-    * touched files, add the rewritten+inserted files. Aborts on a
-    * concurrent commit (like `compact`) rather than merging onto a stale
-    * snapshot — the caller re-runs against the new tip.
+    * touched files, add the rewritten+inserted files. A lost publish
+    * race re-claims only past provably disjoint commits
+    * (`publishReconciling`); a conflicting one aborts rather than merging
+    * onto a stale snapshot — the caller re-runs against the new tip.
     *
     * With `clusterBy` (typically = keyCols), the rewritten+inserted rows
     * are range-partitioned and sorted on those columns before staging —
@@ -2901,8 +2901,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
   def merge(updates: DataFrame, keyCols: Seq[String],
       clusterBy: Seq[String] = Nil, cdc: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = currentVersion
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(currentVersion)
     val keyExpr = keyCols.map(col)
     // Materialize the update source ONCE (spill-safe cache, batch-sized —
     // a merge's source is an update batch, never the table): it feeds the
@@ -2943,14 +2942,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // (a full exchange of the source keys) is one partial aggregate over
     // the persisted source (r21, guide §2.4)
     val (keyRange, keyPreds) = mergeKeyRanges(updates, keyCols)
-    val candidates: Seq[String] =
-      if (keyPreds.isEmpty) liveFiles(v) else filesSurviving(v, keyPreds)
     // `_f` is the table-relative provenance tag (matches the log's file
     // names directly); DVs are already applied, so a DV-deleted row can
     // neither mark its file touched nor survive into the rewrite
-    val tagged =
-      if (candidates.isEmpty) readTagged(v).drop("_idx").limit(0)
-      else scanTagged(v, candidates).drop("_idx")
+    val tagged = candidateScan(v, Seq(keyPreds)).drop("_idx")
     // ONE candidate scan (r21 fusion): each candidate row left-joins the
     // distinct update keys once (`_m` marks a match — updKeys is
     // distinct, so no row duplication), persisted; touched-file
@@ -2964,8 +2959,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
       .join(updKeys.withColumn("_m", lit(true)), keyCols, "left_outer")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val touched = joinedCand.filter(col("_m").isNotNull)
-      .select("_f").distinct().collect().map(_.getString(0)).toSeq.sorted
+    val touched = touchedFiles(joinedCand.filter(col("_m").isNotNull))
     val inTouched = (if (touched.isEmpty) joinedCand.limit(0)
       else joinedCand.filter(col("_f").isin(touched: _*))).drop("_f")
     // NO multi-match guard here, deliberately: this entry point is
@@ -3037,8 +3031,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // them). A key that exists in the table necessarily lives in a
     // touched file, so the matched/insert split of `updates` falls out
     // of the touched rows' key set alone — never a full-table join.
-    val cdcRel: Option[String] = if (!cdc) None else {
-      val rel = s"_cdc/c-${UUID.randomUUID()}"
+    val cdcRel = cdcSidecar(cdc) {
       val existKeys = inTouched.select(keyExpr: _*).distinct()
       val pre = inTouched.filter(col("_m").isNotNull).drop("_m")
         .withColumn("_change_type", lit("update_preimage"))
@@ -3048,33 +3041,10 @@ final class TxnTable(val spark: SparkSession, val root: String,
         .withColumn("_change_type", lit("insert"))
       pre.unionByName(post, allowMissingColumns = true)
         .unionByName(ins, allowMissingColumns = true)
-        .write.parquet(abs(rel))
-      Some(rel)
     }
-    val merged = touchedRows.unionByName(upsI, allowMissingColumns = true)
-    val cb = if (clusterBy.nonEmpty) clusterBy else declaredClusterBy(v)
-    val staged =
-      if (cb.isEmpty) merged
-      else merged.repartitionByRange(math.max(1, touched.size), cb.map(col): _*)
-        .sortWithinPartitions(cb.map(col): _*)
-    val sc = unionSchema(schemaAt(v), upsI.schema, freshPhysFor())
-    val (files, rows, fstats) =
-      try stage(toPhysical(enforced(staged, constraintsAt(v)), sc))
-      finally idCleanup()
-    // lost publish races re-validate and re-claim WITHOUT re-staging when
-    // every intervening commit is provably disjoint (file sets + key
-    // ranges) — two merges on disjoint key ranges each stage exactly once.
-    // With an identity allocation in play the commit carries the new
-    // high-water props; reconcilable's props check then refuses any
-    // intervening ALLOCATING commit, so a raced id range is re-derived
-    // by the caller's re-run, never re-claimed.
-    val guard = keyRange.map { case (lo, hi) =>
-      (physicalIn(Some(sc), keyCols.head), lo, hi)
-    }
-    publishReconciling(v, "merge", rows, files, touched, Some(sc),
-      cdcRel, fstats, guard, "merge",
-      props = if (hwDelta.isEmpty) None
-        else Some(propertiesAt(v) ++ hwDelta))
+    publishMerge(v, touchedRows.unionByName(upsI, allowMissingColumns = true),
+      upsI.schema, if (clusterBy.nonEmpty) clusterBy else declaredClusterBy(v),
+      touched, cdcRel, keyCols.head, keyRange, hwDelta, idCleanup)
     } finally { joinedCand.unpersist(); () }
   }
 
@@ -3132,8 +3102,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
       s"target and source aliases must differ, both are '$targetAlias'")
     Seq(targetAlias, sourceAlias).foreach(a => require(
       a.matches("[A-Za-z_][A-Za-z0-9_]*"), s"bad merge alias: $a"))
-    val v = currentVersion
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(currentVersion)
     keyCols.foreach(k => require(source.columns.contains(k),
       s"merge source lacks key column $k"))
     // materialized once for the same reasons as `merge`: the source
@@ -3202,41 +3171,31 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // to the full live set — pruning loss only, never rows. This is what
     // makes the retention sweep (`... BY SOURCE AND t.ts < cutoff THEN
     // DELETE`) plan the old files instead of scanning 100 TB.
-    val keyCandidates: Seq[String] =
-      if (keyPreds.isEmpty) liveFiles(v) else filesSurviving(v, keyPreds)
-    val candidates: Seq[String] =
-      if (bySource.isEmpty) keyCandidates
+    val bsPreds: Seq[Seq[TxnTable.SkipPred]] =
+      if (bySource.isEmpty) Nil
       else {
         val conds: Seq[Option[String]] = bySource.map {
           case MergeClause.UpdateBySource(c, _) => c
           case MergeClause.DeleteBySource(c) => c
           case _ => None
         }
-        val bsCandidates: Seq[String] =
-          if (conds.exists(_.isEmpty)) liveFiles(v)
-          else {
-            def unscoped(c: String): Option[org.apache.spark.sql.Column] =
-              scala.util.Try {
-                val e = spark.sessionState.sqlParser.parseExpression(c)
-                  .transform {
-                    case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                        if a.nameParts.length == 2 &&
-                          a.nameParts.head.equalsIgnoreCase(tA) =>
-                      org.apache.spark.sql.catalyst.analysis
-                        .UnresolvedAttribute(a.nameParts.tail)
-                  }
-                org.apache.spark.sql.graftbridge.Bridge.column(e)
-              }.toOption
-            val cols = conds.flatten.map(unscoped)
-            if (cols.exists(_.isEmpty)) liveFiles(v)
-            else filesSurviving(v,
-              skipPredsFor(cols.flatten.reduce(_ || _), v))
-          }
-        (keyCandidates ++ bsCandidates).distinct.sorted
+        def unscoped(c: String): Option[org.apache.spark.sql.Column] =
+          scala.util.Try {
+            val e = spark.sessionState.sqlParser.parseExpression(c)
+              .transform {
+                case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+                    if a.nameParts.length == 2 &&
+                      a.nameParts.head.equalsIgnoreCase(tA) =>
+                  org.apache.spark.sql.catalyst.analysis
+                    .UnresolvedAttribute(a.nameParts.tail)
+              }
+            org.apache.spark.sql.graftbridge.Bridge.column(e)
+          }.toOption
+        val cols = conds.map(_.flatMap(unscoped))
+        Seq(if (cols.exists(_.isEmpty)) Nil
+          else skipPredsFor(cols.flatten.reduce(_ || _), v))
       }
-    val tagged =
-      if (candidates.isEmpty) readTagged(v).drop("_idx").limit(0)
-      else scanTagged(v, candidates).drop("_idx")
+    val tagged = candidateScan(v, keyPreds +: bsPreds).drop("_idx")
     val tCols = tagged.columns.filterNot(_ == "_f").toSeq
     val sCols = src.columns.toSeq
     val types = schemaAt(v).map(_.fields.map(f =>
@@ -3301,9 +3260,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
           case MergeClause.DeleteBySource(c) => condCol(c)
           case _ => lit(false)
         }.reduce(_ || _)
-      pairAll.filter(touches)
-        .select("_f").distinct().collect().map(_.getString(0))
-        .toSeq.sorted
+      touchedFiles(pairAll.filter(touches))
     }
     val decided = pairAll.filter(matchedRow).withColumn("_ci", mIdx)
     // multi-match guard (key-replace `merge` has none): a target KEY
@@ -3453,8 +3410,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
           kept.unionByName(u, allowMissingColumns = true))
       }
     // ---- CDC sidecar at commit time (pre-images die with the rewrite)
-    val cdcRel: Option[String] = if (!cdc) None else {
-      val rel = s"_cdc/c-${UUID.randomUUID()}"
+    val cdcRel = cdcSidecar(cdc) {
       val updIdx = matched.zipWithIndex.collect {
         case (_: MergeClause.Update, i) => i }
       val bsUpdIdx = bySource.zipWithIndex.collect {
@@ -3481,8 +3437,6 @@ final class TxnTable(val spark: SparkSession, val root: String,
         insertFinal.map(_.withColumn("_change_type", lit("insert")))
       ).flatten
       frames.reduce(_.unionByName(_, allowMissingColumns = true))
-        .write.parquet(abs(rel))
-      Some(rel)
     }
     // ---- rewrite content. Matched or BY SOURCE clauses present:
     // touched files' unmatched rows (clause-decided) + kept matched
@@ -3499,29 +3453,13 @@ final class TxnTable(val spark: SparkSession, val root: String,
       case Seq() => tagged.drop("_f").limit(0)
       case ps => ps.reduce(_.unionByName(_, allowMissingColumns = true))
     }
-    val cb = declaredClusterBy(v)
-    val staged =
-      if (cb.isEmpty) merged
-      else merged.repartitionByRange(math.max(1, rewriteFiles.size),
-        cb.map(c => col(s"`$c`")): _*)
-        .sortWithinPartitions(cb.map(c => col(s"`$c`")): _*)
-    val sc = unionSchema(schemaAt(v), merged.schema, freshPhysFor())
-    val (files, rows, fstats) =
-      try stage(toPhysical(enforced(staged, constraintsAt(v)), sc))
-      finally idCleanup()
     // the key-range disjointness guard is UNSOUND once a BY SOURCE
     // clause is in play: an intervening add OUTSIDE the source-key
     // range could still hold rows the clause would fire on, so a
     // serial replay would differ — fail closed (race ⇒ re-run)
-    val guard =
-      if (bySource.nonEmpty) None
-      else keyRange.map { case (lo, hi) =>
-        (physicalIn(Some(sc), keyCols.head), lo, hi)
-      }
-    publishReconciling(v, "merge", rows, files, rewriteFiles, Some(sc),
-      cdcRel, fstats, guard, "merge",
-      props = if (hwDelta.isEmpty) None
-        else Some(propertiesAt(v) ++ hwDelta))
+    publishMerge(v, merged, merged.schema, declaredClusterBy(v),
+      rewriteFiles, cdcRel, keyCols.head,
+      if (bySource.nonEmpty) None else keyRange, hwDelta, idCleanup)
     } finally { pairAll.unpersist(); () }
   }
 
@@ -3547,8 +3485,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
   def deleteWhere(cond: org.apache.spark.sql.Column,
       dv: Boolean = false, cdc: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val v = currentVersion
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(currentVersion)
     // METADATA-ONLY FILE DROPS (r18): when the WHOLE condition
     // translates exactly into per-column bounds (SkipExtract.exactPreds
     // — the inverse soundness contract of skipping), a live file whose
@@ -3568,46 +3505,28 @@ final class TxnTable(val spark: SparkSession, val root: String,
     val provable: Seq[String] =
       if (dv || cdc) Nil
       else exactAllFor(cond, v).map(provablyAllMatch(v, _)).getOrElse(Nil)
-    val tagged = taggedCandidates(cond, v, provable.toSet)
+    val tagged = candidateScan(v, Seq(skipPredsFor(cond, v)), provable.toSet)
     // the matched rows feed up to three consumers (the touched-file
     // collect or DV sidecar, plus the CDC capture) — materialize once;
     // bounded by match bytes, unpersisted before return
     val matched = tagged.filter(coalesce(cond, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    // deleted-row content as a CDC sidecar: same commit-time discipline
-    // as merge (after the commit the rows are gone — or, in DV mode,
-    // invisible — so the feed must capture them now)
-    def writeCdc(): Option[String] = if (!cdc) None else {
-      val rel = s"_cdc/c-${UUID.randomUUID()}"
-      matched.drop("_f", "_idx").withColumn("_change_type", lit("delete"))
-        .write.parquet(abs(rel))
-      Some(rel)
-    }
-    if (dv) {
-      val rel = s"_dv/dv-${UUID.randomUUID()}"
-      matched
-        .select(col("_f").as("path"), col("_idx").as("row_idx"))
-        .write.parquet(abs(rel))
-      val nDel = parquetRowCount(ls(rootP.resolve(rel))
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-        .map(f => s"$rel/$f"))
-      if (nDel == 0) return v // nothing matched: leave no commit behind
-      if (!tryCommit(v + 1, "delete", nDel, Nil, Nil, None, schemaAt(v),
-          dv = Some(rel), cdc = writeCdc()))
-        throw new IllegalStateException(
-          s"delete lost the race at v${v + 1}; re-run against the new tip")
-      return v + 1
-    }
-    val touched = matched
-      .select("_f").distinct().collect().map(_.getString(0)).toSeq.sorted
+    // deleted-row content as a CDC sidecar (after the commit the rows
+    // are gone — or, in DV mode, invisible)
+    def writeCdc() = cdcSidecar(cdc)(
+      matched.drop("_f", "_idx").withColumn("_change_type", lit("delete")))
+    // the DV commit records the DELETED count as its rows
+    if (dv) return commitDv(v, "delete", matched, writeCdc())(n =>
+      (Nil, n, Map.empty))
+    val touched = touchedFiles(matched)
     if (touched.isEmpty && provable.isEmpty) return v
     if (touched.isEmpty) {
       // pure metadata-only delete: every affected file was PROVEN
       // fully-matched — nothing to scan, nothing to stage, one
       // remove-only commit (cdc is off on this path by construction)
       return publishReconciling(v, "delete", 0L, Nil, provable,
-        schemaAt(v), None, Map.empty, None, "delete")
+        schemaAt(v), None, Map.empty, None)
     }
     val keep = tagged.filter(col("_f").isin(touched: _*))
       .filter(coalesce(cond, lit(false)) === lit(false)).drop("_f", "_idx")
@@ -3617,8 +3536,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     // intervening commits (guard = None: an arbitrary delete predicate
     // has no key range to prove adds disjoint against — fail closed)
     publishReconciling(v, "delete", rows, files,
-      (touched ++ provable).sorted, schemaAt(v),
-      writeCdc(), fstats, None, "delete")
+      (touched ++ provable).sorted, schemaAt(v), writeCdc(), fstats, None)
     } finally { matched.unpersist(); () }
   }
 
@@ -3646,9 +3564,8 @@ final class TxnTable(val spark: SparkSession, val root: String,
       cond: org.apache.spark.sql.Column, cdc: Boolean = false,
       dv: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val v = currentVersion
-    require(v >= 0, s"no committed version in $root")
-    val tagged = taggedCandidates(cond, v)
+    val v = committed(currentVersion)
+    val tagged = candidateScan(v, Seq(skipPredsFor(cond, v)))
     val dataCols = tagged.columns.filterNot(c => c == "_f" || c == "_idx").toSeq
     set.keys.foreach(k => require(dataCols.contains(k), s"no such column: $k"))
     // GENERATED ALWAYS columns refuse direct assignment; they recompute
@@ -3673,37 +3590,16 @@ final class TxnTable(val spark: SparkSession, val root: String,
     try {
       val updated = withGenerated(applySet(matched.drop("_f", "_idx")), v,
         rejectExplicit = false)
-      def writeCdc(): Option[String] = if (!cdc) None else {
-        val rel = s"_cdc/c-${UUID.randomUUID()}"
-        matched.drop("_f", "_idx")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(updated.withColumn("_change_type", lit("update_postimage")))
-          .write.parquet(abs(rel))
-        Some(rel)
-      }
+      def writeCdc() = cdcSidecar(cdc)(matched.drop("_f", "_idx")
+        .withColumn("_change_type", lit("update_preimage"))
+        .unionByName(updated.withColumn("_change_type", lit("update_postimage"))))
       val sc = schemaAt(v)
-      if (dv) {
-        // merge-on-read: DV the old images out, stage the new ones in —
-        // both in ONE commit, so no read ever sees the pre/post mix
-        val rel = s"_dv/dv-${UUID.randomUUID()}"
-        matched
-          .select(col("_f").as("path"), col("_idx").as("row_idx"))
-          .write.parquet(abs(rel))
-        val nUpd = parquetRowCount(ls(rootP.resolve(rel))
-          .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-          .map(f => s"$rel/$f"))
-        if (nUpd == 0) return v // nothing matched: no commit
-        val (files, rows, fstats) = stage(
-          toPhysical(enforced(updated, constraintsAt(v)),
-            sc.getOrElse(updated.schema)))
-        if (!tryCommit(v + 1, "update", rows, files, Nil, None, sc,
-            dv = Some(rel), cdc = writeCdc(), stats = fstats))
-          throw new IllegalStateException(
-            s"update lost the race at v${v + 1}; re-run against the new tip")
-        return v + 1
-      }
-      val touched = matched
-        .select("_f").distinct().collect().map(_.getString(0)).toSeq.sorted
+      // merge-on-read: DV the old images out, stage the new ones in —
+      // both in ONE commit, so no read ever sees the pre/post mix
+      if (dv) return commitDv(v, "update", matched, writeCdc())(_ =>
+        stage(toPhysical(enforced(updated, constraintsAt(v)),
+          sc.getOrElse(updated.schema))))
+      val touched = touchedFiles(matched)
       if (touched.isEmpty) return v // nothing matched: no commit
       val keep = tagged.filter(col("_f").isin(touched: _*))
         .filter(matchedPred === lit(false)).drop("_f", "_idx")
@@ -3711,7 +3607,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
       val (files, rows, fstats) = stage(sc.fold(rewritten)(toPhysical(rewritten, _)))
       // same remove-only reconciliation window as copy-on-write delete
       publishReconciling(v, "update", rows, files, touched, sc,
-        writeCdc(), fstats, None, "update")
+        writeCdc(), fstats, None)
     } finally { matched.unpersist(); () }
   }
 
@@ -3775,8 +3671,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
   def readChanges(since: Long, upTo: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val tip = if (upTo < 0) currentVersion else upTo
-    val tipSchema = schemaAt(tip).getOrElse(
-      throw new IllegalStateException(s"no schema recorded at v$tip"))
+    val tipSchema = schemaOf(tip)
     def normalize(df: DataFrame, v: Long): DataFrame =
       df.select(tipSchema.fields.map(f =>
         // backquoted: a dotted column name must not parse as a field path
@@ -3829,8 +3724,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * read; -1 rows = file recorded before the `#rows` stat existed. */
   def filesDF(version: Long = -1L): DataFrame = {
     import spark.implicits._
-    val v = if (version < 0) currentVersion else version
-    require(v >= 0, s"no committed version in $root")
+    val v = committed(version)
     val stats = statsAt(v)
     liveFiles(v).map { f =>
       val enc = stats.get(f)
@@ -3850,8 +3744,7 @@ final class TxnTable(val spark: SparkSession, val root: String,
     * full metadata scan of KB entries — the interactive-query path, not
     * a per-read one. */
   def versionAtTime(tsMillis: Long): Long = {
-    val tip = currentVersion
-    require(tip >= 0, s"no committed version in $root")
+    val tip = committed(currentVersion)
     var eff = Long.MinValue
     var res = -1L
     entries(tip).foreach { e =>

@@ -3131,11 +3131,27 @@ class TxnSpec extends SparkTestBase {
     // the range excludes from DISK (after both plans are bound) — the
     // pruned execution still answers, the full scan fails at execution
     // (it genuinely needs the file)
+    // an IN list and a string prefix prune the same way
+    val inList = full.filter(col("k").isin(110L, 250L))
+    val wantIn = Set((110L, 330L), (250L, 750L))
+    assert(inList.as[(Long, Long)].collect().toSet == wantIn)
+    val s = TxnTable.fresh(spark, dir("bridge_prune_str"))
+    Seq("a", "b", "c", "d").foreach(p =>
+      s.append((0 until 50).map(i => (f"$p$i%02d", i)).toDF("s", "n")))
+    val fullS = spark.read.format("graft-txn").load(s.root)
+    val prefixed = fullS.filter(col("s").startsWith("b1"))
+    val wantS = (10 until 20).map(i => (s"b$i", i)).toSet
+    assert(prefixed.as[(String, Int)].collect().toSet == wantS)
     val victim = Paths.get(java.net.URI.create(
       t.readRange("k", 300, 399).inputFiles.filter(_.contains("/d-")).head))
     Files.delete(victim)
     assert(ranged.as[(Long, Long)].collect().toSet == want)
+    assert(inList.as[(Long, Long)].collect().toSet == wantIn)
     intercept[Exception] { full.count() }
+    Files.delete(Paths.get(java.net.URI.create(
+      s.readRangeStr("s", "d", "d~").inputFiles.filter(_.contains("/d-")).head)))
+    assert(prefixed.as[(String, Int)].collect().toSet == wantS)
+    intercept[Exception] { fullS.count() }
   }
 
   test("readWhereIn composes stats + bloom skipping per value") {
